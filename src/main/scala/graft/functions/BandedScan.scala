@@ -38,23 +38,17 @@ object BandedScan {
 
   /** Append `out` = running sum of `value` over `key` order (long columns;
     * `desc` flips the direction, `includeCurrent` picks running-total vs
-    * strictly-before semantics). NULL keys are dropped (same semantics as
-    * the former band+stitch form, whose null __band never matched the
-    * stitch equi-join) — the distinct-non-null-key contract is enforced
-    * here instead of silently producing an independent null-partition
-    * prefix for a violating call site. */
+    * strictly-before semantics). A NULL key fails the query: it would
+    * otherwise land in a prefix of its own, and dropping it silently would
+    * lose its value from every total. The check rides the partition key
+    * the scan evaluates for every row anyway — no extra job. */
   def cumSum(df: DataFrame, key: String, value: String, out: String,
       desc: Boolean = false, includeCurrent: Boolean = true): DataFrame = {
-    // pmod(key, 1) = 0 for every non-null key, but is NOT foldable (the
-    // key column is not a literal), so the partition spec survives
-    // optimization and WindowExec sees a non-empty clustering — one
-    // explicit partition instead of the implicit-global WARN path.
-    val w = Window.partitionBy(pmod(col(key), lit(1L)))
+    val w = Window.partitionBy(part(key))
       .orderBy(if (desc) col(key).desc else col(key).asc)
       .rowsBetween(Window.unboundedPreceding,
         if (includeCurrent) Window.currentRow else -1)
-    df.filter(col(key).isNotNull)
-      .withColumn(out, coalesce(sum(col(value)).over(w), lit(0L)))
+    df.withColumn(out, coalesce(sum(col(value)).over(w), lit(0L)))
   }
 
   /** The FULL-partition frame over the same explicit constant partition —
@@ -71,5 +65,16 @@ object BandedScan {
     // no orderBy and no explicit frame: an unordered window spec defaults
     // to the entire partition (an ordered one would default to a running
     // frame, and an explicit frame without ordering fails analysis)
-    Window.partitionBy(pmod(col(key), lit(1L)))
+    Window.partitionBy(part(key))
+
+  /** The one partition key both windows share (equal specs let the total
+    * reuse the running sum's exchange and sort): pmod(key, 1) = 0 for every non-null key, but is NOT
+    * foldable (the key column is not a literal), so the partition spec
+    * survives optimization and WindowExec sees a non-empty clustering — one
+    * explicit partition instead of the implicit-global WARN path. A null
+    * key raises here, in the pass that evaluates the key for every row. */
+  private def part(key: String) =
+    pmod(when(col(key).isNull,
+        raise_error(lit(s"BandedScan.cumSum: null key in column $key")))
+      .otherwise(col(key)), lit(1L))
 }

@@ -1503,13 +1503,14 @@ object CoreRelational {
       val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_") +
         "_" + dirHash
       val (ot, ct) = (s"graft_bkt_orders_$tag", s"graft_bkt_customer_$tag")
+      val root = graft.sources.ScratchDirs.dirFor(d, "bucketed")
       orders(s, d).repartition(8, col("o_custkey"))
         .write.mode("overwrite").format("parquet")
-        .option("path", s"/tmp/graft_bucketed/$tag/orders")
+        .option("path", s"$root/orders")
         .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(ot)
       customer(s, d).repartition(8, col("c_custkey"))
         .write.mode("overwrite").format("parquet")
-        .option("path", s"/tmp/graft_bucketed/$tag/customer")
+        .option("path", s"$root/customer")
         .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(ct)
       (ot, ct)
     })

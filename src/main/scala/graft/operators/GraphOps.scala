@@ -28,7 +28,7 @@ object GraphOps {
 
   /** Run `body` (an iterative-fixpoint BUILD: kcore/LPA rounds, the
     * components loop) with the shuffle width right-sized for vertex-sized
-    * frames — the `drainStateful` rationale applied to graph fixpoints.
+    * frames — the `Drain.stateWidth` rationale applied to graph fixpoints.
     * Each round's survivor/label frame is |V|-sized however big the
     * corpus, and every round pays per-partition stage orchestration: at
     * the batch session's width 32 that overhead dominated (gr_kcore
@@ -37,7 +37,7 @@ object GraphOps {
     * the per-deployment sizing lever — at 100 TB this is sized UP with
     * |V|, independent of the batch width. Synchronized on the session and
     * restored before returning (same single-driver contract as
-    * StreamingGraded.drainStateful); results are width-independent by
+    * graft.streaming.Drain); results are width-independent by
     * design — min-label, ±votes and integer ranks are order-free
     * aggregates, pinned by the oracle gate at two widths (tests run at 4,
     * Verify/Bench at this knob).

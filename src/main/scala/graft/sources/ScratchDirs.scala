@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *    the unbounded `createTempDirectory` growth a 5-pass bench otherwise
   *    leaves in /tmp;
   *  - SINGLE-DRIVER ASSUMPTION (same contract as
-  *    `StreamingGraded.drainStateful`): path stability deliberately spans
+  *    `graft.streaming.Drain`): path stability deliberately spans
   *    JVMs, so two CONCURRENT drivers grading the same data dir would race
   *    each other's eager overwrite against the other's lazy graded read.
   *    The sequential Verify/Bench/test drivers this registry runs under

@@ -54,9 +54,10 @@ object Tables {
 
   /** Streaming form of [[table]]: the same parquet read as a file-source
     * stream, with the same timestamp folding. File streams require an
-    * explicit schema, so it is pinned from a batch scan of the same path —
-    * at scale the file source incrementally lists and processes new files
-    * under the directory, which is exactly the landing-zone ingest shape.
+    * explicit schema, so it is pinned from a batch scan of the same path
+    * (once per session and path) — at scale the file source incrementally
+    * lists and processes new files under the directory, which is exactly
+    * the landing-zone ingest shape.
     *
     * Layout-robust: the fixture has historically been ONE FILE named
     * `<name>.parquet` per table (monitor the shared dir, glob-filtered to
@@ -68,8 +69,7 @@ object Tables {
     if (name == "events")
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val sch = s.read.parquet(path).schema
-    val reader = s.readStream.schema(sch)
+    val reader = s.readStream.schema(streamSchema(s, path))
     // layout detection through the Hadoop FS API (java.io.File.isDirectory
     // is false for any file:///hdfs:// URI and would silently fall back to
     // the single-file glob — the zero-row drain this branch exists to
@@ -81,6 +81,25 @@ object Tables {
       if (isDir) reader.option("pathGlobFilter", "*.parquet").parquet(path)
       else reader.option("pathGlobFilter", s"$name.parquet").parquet(dir)
     normTs(src)
+  }
+
+  // A stream's file schema, pinned once per (session, path): inferring it
+  // is a parquet footer-read job, and every drain rebuilt per pass paid
+  // one before its first batch. PREP under BASELINE.md's rule (a table
+  // read); same lifetime and immutable-fixture contract as tableMemo.
+  private val streamSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), org.apache.spark.sql.types.StructType]()
+  graft.CacheRegistry.onRelease(() => streamSchemaMemo.clear())
+
+  private def streamSchema(s: SparkSession, path: String) =
+    streamSchemaMemo.computeIfAbsent((s, path), _ => s.read.parquet(path).schema)
+
+  /** Bytes a [[tableStream]] of `name` starts from (the file, or every file
+    * under a table directory): a file-system call, no Spark job. */
+  def streamBacklogBytes(s: SparkSession, dir: String, name: String): Long = {
+    val hp = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getContentSummary(hp).getLength
   }
 
   private def eventsRaw(s: SparkSession, d: String): DataFrame =

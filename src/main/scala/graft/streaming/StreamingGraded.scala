@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
 
@@ -24,63 +23,9 @@ import graft.sources.Tables
   */
 object StreamingGraded {
 
-  /** Start-and-drain a STATEFUL streaming query with the shuffle width
-    * right-sized for the drained volume. A stateful operator materializes
-    * `shuffle.partitions` state-store instances per store (several stores
-    * for an outer join), each committing checkpoint files every batch —
-    * at the batch session's width of 32 that is pure fixed overhead for a
-    * bounded drain (the stream-stream join spent ~6 of its 8 s there).
-    * The conf is a per-query knob because streaming queries PIN the
-    * width into their checkpoint at first start: at 100 TB/day this is
-    * sized UP per query for state volume, independent of the batch
-    * width — which is exactly how it is exercised here, just downward.
-    * Restored before returning, so the graded read-back and every other
-    * registry query still plan at the session's width. */
-  private def drainStateful(s: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    // synchronized on the session: serializes concurrent DRAINS (two
-    // drains interleaving would restore each other's width or pin the
-    // wrong width into a checkpoint). It does NOT fence arbitrary
-    // concurrent planning — a planner thread reads the conf without
-    // taking this monitor — so the session-global width rewrite remains
-    // safe only under the sequential Verify/Bench drivers this registry
-    // runs in; a future concurrent driver must schedule drains onto a
-    // dedicated session (cloned confs) instead of sharing this one.
-    s.synchronized {
-      val widthKey = "spark.sql.shuffle.partitions"
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val old = s.conf.get(widthKey)
-      val oldProv = s.conf.getOption(provKey)
-      // SPARK_GRAFT_DRAIN_WIDTH is the per-deployment sizing knob (at
-      // 100 TB/day this is sized UP for state volume); widths 1/2/4 were
-      // measured within run-to-run noise at the graded SFs (the width-32
-      // penalty r5 fixed came from 8× more state-store instances, and 4
-      // is already past the knee), so the default stays 4.
-      s.conf.set(widthKey, sys.env.getOrElse("SPARK_GRAFT_DRAIN_WIDTH", "4"))
-      // State-store provider, the production knob at 100 TB/day: rocksdb
-      // moves state off-heap (no GC pressure, changelog checkpointing) but
-      // pays a JNI + per-batch snapshot floor per store instance. Measured
-      // on these bounded drains (BASELINE.md r8): HDFS-backed wins at the
-      // graded SFs — the drains are state-store-FLOOR-dominated, so the
-      // in-memory provider's zero setup cost beats rocksdb's machinery;
-      // rocksdb becomes right when per-instance state outgrows executor
-      // heap, which is a deployment decision this env var flips without a
-      // code change (A/B'd oracle-green both ways).
-      sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach {
-        case "rocksdb" => s.conf.set(provKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        case other => s.conf.set(provKey, other)
-      }
-      try start.awaitTermination()
-      finally {
-        s.conf.set(widthKey, old)
-        if (sys.env.contains("SPARK_GRAFT_STATE_PROVIDER"))
-          oldProv match {
-            case Some(p) => s.conf.set(provKey, p)
-            case None    => s.conf.unset(provKey)
-          }
-      }
-    }
+  /** The width a stateful drain over the `name` table stream runs at. */
+  private def stateOf(s: SparkSession, d: String, name: String = "events") =
+    Drain.StateWidth(Tables.streamBacklogBytes(s, d, name))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -96,11 +41,8 @@ object StreamingGraded {
       val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
       val admitted = StreamingOps.admitAgainstCorpus(incoming, corpus)
         .select(col("doc_id"), col("text_hash"))
-      val sink = "dd_admit_stream_sink"
-      val q = admitted.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(sink).orderBy("doc_id")
+      Drain.toMemory(s, admitted, "dd_admit_stream_sink", "append")
+        .orderBy("doc_id")
     }),
 
     // I4 promoted to the oracle gate: a WATERMARKED tumbling aggregate in
@@ -123,12 +65,8 @@ object StreamingGraded {
         .select(
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
           col("event_type"), col("n"))
-      val sink = "i4_watermark_sink"
-      drainStateful(s) {
-        agg.writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-      s.table(sink).orderBy("hour_start", "event_type")
+      Drain.toMemory(s, agg, "i4_watermark_sink", "append", stateOf(s, d))
+        .orderBy("hour_start", "event_type")
     }),
 
     // The hardest streaming operator promoted to the gate: the left-outer
@@ -147,12 +85,7 @@ object StreamingGraded {
     "i14_stream_join" -> ((s, d) => {
       val joined = StreamingOps.clickToPurchaseLeftJoin(
         Tables.tableStream(s, d, "events"))
-      val sink = "i14_stream_join_sink"
-      drainStateful(s) {
-        joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-      s.table(sink)
+      Drain.toMemory(s, joined, "i14_stream_join_sink", "append", stateOf(s, d))
         .select(col("click_id"), col("user_id"),
           expr("unix_micros(click_ts)").as("click_us"),
           col("purchase_id"),
@@ -173,12 +106,7 @@ object StreamingGraded {
     // bounded-state trade never bites here.
     "e8b_retention_stream" -> ((s, d) => {
       val deltas = StreamingOps.retentionDeltas(Tables.tableStream(s, d, "events"))
-      val sink = "e8b_retention_sink"
-      drainStateful(s) {
-        deltas.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-      s.table(sink)
+      Drain.toMemory(s, deltas, "e8b_retention_sink", "append", stateOf(s, d))
         .groupBy("cohort_us", "week_offset")
         .agg(sum(col("delta")).as("active_users"))
         .filter(col("active_users") =!= 0)
@@ -206,12 +134,8 @@ object StreamingGraded {
           unix_micros(col("ts")).as("us"))
         .as[StreamingOps.UserEvent]
       val prog = StreamingOps.funnelStages(ev, Seq("view", "click", "purchase"))
-      val sink = "e7b_funnel_sink"
-      drainStateful(s) {
-        prog.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      }
-      s.table(sink).groupBy("user_id")
+      Drain.toMemory(s, prog, "e7b_funnel_sink", "update", stateOf(s, d))
+        .groupBy("user_id")
         .agg(max(col("stage")).cast("int").as("stage"))
         .orderBy("user_id")
     }),
@@ -237,14 +161,9 @@ object StreamingGraded {
         .select(col("user_id"), col("event_type").as("old_type"))
       val delta = Tables.tableStream(s, d, "events").filter(col("ts") > wm)
       val changes = StreamingOps.syncChanges(delta, target)
-      val sink = "i11b_sync_sink"
-      drainStateful(s) {
-        changes.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      }
       val last = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n_delta").desc)
-      s.table(sink)
+      Drain.toMemory(s, changes, "i11b_sync_sink", "update", stateOf(s, d))
         .withColumn("rn", row_number().over(last)).filter(col("rn") === 1)
         .select(col("user_id"), col("new_type"), col("change"), col("n_delta"))
         .orderBy("user_id")
@@ -268,18 +187,10 @@ object StreamingGraded {
       // spooling queries leave an unbounded trail of temp trees in /tmp
       val tmp = graft.sources.ScratchDirs.freshDirFor(s, d, "e13b_vol")
       val alarms = StreamingOps.volumeAlarms(Tables.tableStream(s, d, "events"))
-      drainStateful(s) {
-        alarms.toDF().writeStream
-          .foreachBatch { (df: DataFrame, id: Long) =>
-            df.withColumn("batch_seq", lit(id))
-              .write.mode("append").parquet(s"$tmp/spool")
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      }
       val last = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type", "day").orderBy(col("batch_seq").desc)
-      s.read.parquet(s"$tmp/spool")
+      Drain.toSpool(s, tmp, alarms, stateOf(s, d), "update")(
+        (batch, id) => batch.withColumn("batch_seq", lit(id)))
         .withColumn("rn", row_number().over(last)).filter(col("rn") === 1)
         .select(col("event_type"), col("day"), col("n"), col("base7"),
           col("spike"), col("slump"))
@@ -311,30 +222,23 @@ object StreamingGraded {
         .groupBy(col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
         .agg(sum(graft.functions.ExactNum.tenK(col("value"))).as("xt"))
-      val sink = "e18b_cusum_sink"
-      drainStateful(s) {
-        daily.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      }
+      val drained =
+        Drain.toMemory(s, daily, "e18b_cusum_sink", "complete", stateOf(s, d))
       // detach the sink view before the detector: cusumOf self-references
       // its input (daily ⋈ per-type stats), and MemoryPlan views reuse the
       // same attribute ids on both sides — a fresh DataFrame over the
-      // collected-at-rest rows gives the analyzer distinct ids (the frame
-      // is |days × types|, monitoring-sized)
-      val drained = s.table(sink)
-      val daily2 = s.createDataFrame(drained.rdd, drained.schema)
+      // collected-at-rest rows gives the analyzer distinct ids. The frame
+      // is |days × types| (about 150 rows at sf0.01), monitoring-sized, so
+      // it is collected into a LocalRelation: no RDD lineage to schedule
+      val daily2 = s.createDataFrame(drained.collectAsList(), drained.schema)
       graft.operators.WindowedAnalytics.cusumOf(daily2)
         .orderBy("event_type", "day")
     }),
 
     "e9b_quantiles_stream" -> ((s, d) => {
       val q = StreamingOps.weeklyValueQuantiles(Tables.tableStream(s, d, "events"))
-      val sink = "e9b_quantiles_sink"
-      drainStateful(s) {
-        q.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      }
-      s.table(sink).orderBy("wk", "event_type")
+      Drain.toMemory(s, q, "e9b_quantiles_sink", "complete", stateOf(s, d))
+        .orderBy("wk", "event_type")
     }),
 
     // The versioned-table upsert sink (L15 / i7's production form) driven
@@ -448,31 +352,25 @@ object StreamingGraded {
         p => ev.repartition(4).write.mode("overwrite").parquet(p))
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(spool)
-      StreamingOps.withMergeWidth(s) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          StreamingOps.applyUpsertBatchStaged(s, batch, s"$tmp/table") {
-            (verDir, cur) =>
-              val feed =
-                if (cur == 0L)
-                  s.read.parquet(verDir)
-                    .select(lit(null).cast("string").as("old_type"),
-                      col("event_type").as("new_type"))
-                else
-                  StreamingOps.upsertChangeFeed(s, s"$tmp/table", cur - 1, cur)
-                    .select(col("old_type"), col("new_type"))
-              feed
-                .select(explode(array(
-                  struct(col("new_type").as("etype"), lit(1L).as("delta")),
-                  struct(col("old_type").as("etype"), lit(-1L).as("delta")))).as("x"))
-                .select(col("x.etype").as("etype"), col("x.delta").as("delta"))
-                .filter(col("etype").isNotNull)
-                .write.mode("overwrite").parquet(s"$verDir/_feed")
-          }
+      Drain.eachBatch(s, s"$tmp/ckpt", stream, Drain.MergeWidth) { (batch, _) =>
+        StreamingOps.applyUpsertBatchStaged(s, batch, s"$tmp/table") {
+          (verDir, cur) =>
+            val feed =
+              if (cur == 0L)
+                s.read.parquet(verDir)
+                  .select(lit(null).cast("string").as("old_type"),
+                    col("event_type").as("new_type"))
+              else
+                StreamingOps.upsertChangeFeed(s, s"$tmp/table", cur - 1, cur)
+                  .select(col("old_type"), col("new_type"))
+            feed
+              .select(explode(array(
+                struct(col("new_type").as("etype"), lit(1L).as("delta")),
+                struct(col("old_type").as("etype"), lit(-1L).as("delta")))).as("x"))
+              .select(col("x.etype").as("etype"), col("x.delta").as("delta"))
+              .filter(col("etype").isNotNull)
+              .write.mode("overwrite").parquet(s"$verDir/_feed")
         }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       }
       val cur = StreamingOps.readVersionPointer(s, s"$tmp/table").getOrElse(
         sys.error(s"cdc_ivm: nothing published under $tmp/table"))
@@ -507,15 +405,9 @@ object StreamingGraded {
       val hot = graft.operators.LlmOps.hotShingles(corpus)
       val incoming = Tables.tableStream(s, d, "documents")
         .filter(col("doc_id") % 5 === 0)
-      val q = incoming.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          StreamingOps.admitNearBatch(batch, hot, corpusBands)
-            .write.mode("append").parquet(s"$tmp/spool")
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/spool").orderBy("doc_id")
+      Drain.toSpool(s, tmp, incoming)(
+        (batch, _) => StreamingOps.admitNearBatch(batch, hot, corpusBands))
+        .orderBy("doc_id")
     }),
 
     // SG18: streaming dedup-cluster MAINTENANCE at ingest — L69's
@@ -558,19 +450,13 @@ object StreamingGraded {
       // rounds, the whole cost of this drain at graded SFs
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "2").parquet(spool)
-      // width knob around the whole drain (the cdc_ivm discipline): every
+      // merge width around the whole drain (the cdc_ivm discipline): every
       // per-batch frame here is delta-sized, and the session's batch
       // width would pay 32 shuffle partitions of pure scheduling per
       // join/fixpoint round (measured 14.3 s → 4.4 s at sf0.01)
-      StreamingOps.withMergeWidth(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            StreamingOps.applyComponentsBatch(s, tmp, newPairs, batch,
-              LlmOps.isNewDoc)
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      Drain.eachBatch(s, s"$tmp/ckpt", stream, Drain.MergeWidth) { (batch, _) =>
+        StreamingOps.applyComponentsBatch(s, tmp, newPairs, batch,
+          LlmOps.isNewDoc)
       }
       val fin = StreamingOps.readVersionPointer(s, s"$tmp/labels").get
       // retention INSIDE the maintenance job: versions accumulate one per
@@ -625,20 +511,11 @@ object StreamingGraded {
       // a trivial scan-backed merge input — constant-size per batch
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "2").parquet(spool)
-      // width knob around the drain: the per-batch windows are per-doc
+      // merge width around the drain: the per-batch windows are per-doc
       // over a 4-file increment spool — batch width pays pure scheduling
-      StreamingOps.withMergeWidth(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            LlmOps.bpeEncodePrepared(batch, winRow)
-              .write.mode("append").parquet(s"$tmp/spool")
-            ()
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(s"$tmp/spool").orderBy("doc_id")
+      Drain.toSpool(s, tmp, stream, Drain.MergeWidth)(
+        (batch, _) => LlmOps.bpeEncodePrepared(batch, winRow))
+        .orderBy("doc_id")
     }),
 
     // SG12: streaming DECONTAMINATION at ingest — tp_decontaminate's
@@ -664,15 +541,9 @@ object StreamingGraded {
           .join(broadcast(hot), Seq("h"), "left_anti"))
       val incoming = Tables.tableStream(s, d, "documents")
         .filter(TrainingPipeline.pct("split:", col("doc_id")) < 80)
-      val q = incoming.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          StreamingOps.decontaminateBatch(batch, hot, testIndex)
-            .write.mode("append").parquet(s"$tmp/spool")
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/spool").orderBy("train_id")
+      Drain.toSpool(s, tmp, incoming)(
+        (batch, _) => StreamingOps.decontaminateBatch(batch, hot, testIndex))
+        .orderBy("train_id")
     }),
 
     // SG17: streaming DSIR data selection at ingest — tp_dsir's
@@ -690,16 +561,9 @@ object StreamingGraded {
       val tmp = graft.sources.ScratchDirs.freshDirFor(s, d, "dsir_stream")
       val lr = graft.CacheRegistry.materialize(
         graft.operators.TrainingPipeline.dsirModel(Tables.documents(s, d)))
-      val incoming = Tables.tableStream(s, d, "documents")
-      val q = incoming.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          StreamingOps.dsirScoreBatch(batch, lr)
-            .write.mode("append").parquet(s"$tmp/spool")
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/spool").orderBy("doc_id")
+      Drain.toSpool(s, tmp, Tables.tableStream(s, d, "documents"))(
+        (batch, _) => StreamingOps.dsirScoreBatch(batch, lr))
+        .orderBy("doc_id")
     }),
 
     // SG14/I3b: SESSION WINDOWS promoted to the gate — the data-aligned
@@ -725,12 +589,8 @@ object StreamingGraded {
           unix_micros(col("sw.start")).as("start_us"),
           unix_micros(col("sw.end")).as("end_us"),
           col("n_events"))
-      val sink = "i3b_session_sink"
-      drainStateful(s) {
-        sess.writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-      s.table(sink).orderBy("user_id", "start_us")
+      Drain.toMemory(s, sess, "i3b_session_sink", "append", stateOf(s, d))
+        .orderBy("user_id", "start_us")
     }),
 
     // SG13: streaming ANN SERVING — the lookup half of the IVF family
@@ -755,15 +615,9 @@ object StreamingGraded {
         Lsh.ivfAssignments(s, d, nlist = 10, nprobe = 1).filter(col("rnk") === 1))
       val queries = Tables.tableStream(s, d, "embeddings")
         .filter(col("vec_id") % 50 === 0)
-      val q = queries.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          StreamingOps.annServeBatch(batch, cents, corpus)
-            .write.mode("append").parquet(s"$tmp/spool")
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/spool").orderBy("query_id", "rank")
+      Drain.toSpool(s, tmp, queries)(
+        (batch, _) => StreamingOps.annServeBatch(batch, cents, corpus))
+        .orderBy("query_id", "rank")
     }),
 
     // SG20: streaming ANN index MAINTENANCE — the ingest half SG13's
@@ -809,17 +663,11 @@ object StreamingGraded {
       val sch = s.read.parquet(spool).schema
       val stream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "2").parquet(spool)
-      // width knob around the drain: per-batch frames are batch-sized
+      // merge width around the drain: per-batch frames are batch-sized
       // (assignment join + the snapshot union), session width pays pure
       // scheduling per micro-batch
-      StreamingOps.withMergeWidth(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            StreamingOps.maintainIvfBatch(s, tmp, cents, batch)
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      Drain.eachBatch(s, s"$tmp/ckpt", stream, Drain.MergeWidth) {
+        (batch, _) => StreamingOps.maintainIvfBatch(s, tmp, cents, batch)
       }
       val fin = StreamingOps.readVersionPointer(s, s"$tmp/index").get
       val idx = s.read.parquet(s"$tmp/index/v$fin")
@@ -853,12 +701,8 @@ object StreamingGraded {
       val docs = Tables.tableStream(s, d, "documents")
         .withColumn("ts", lit("2024-01-01 10:00:00").cast("timestamp"))
       val kept = StreamingOps.dedupBySimhash(docs)
-      val sink = "dd_simhash_sink"
-      drainStateful(s) {
-        kept.writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-      s.table(sink)
+      Drain.toMemory(s, kept, "dd_simhash_sink", "append",
+          stateOf(s, d, "documents"))
         .groupBy("simhash")
         .agg(count(lit(1)).as("survivors"))
         .orderBy("simhash")

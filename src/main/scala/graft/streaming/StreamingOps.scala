@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming forms of the SURVEY.md §2 I-group operators — the
   * CMDB sync loop as an actual stream (the batch twins in
@@ -548,21 +548,13 @@ object StreamingOps {
     * O(affected files) via file-level pruning on the same plan).
     */
   def runUpsertSinkToParquet(spark: SparkSession, events: Dataset[_],
-      checkpoint: String, target: String): Unit = withMergeWidth(spark) {
-    val q = events.toDF()
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyUpsertBatch(spark, batch, target)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String, target: String): Unit =
+    Drain.eachBatch(spark, checkpoint, events, Drain.MergeWidth, "update") {
+      (batch, _) => applyUpsertBatch(spark, batch, target)
+    }
 
   /** Run `body` (a bounded sequence of per-batch LWW merges) at the
-    * MERGE shuffle width — the `drainStateful`/`withFixpointWidth` sizing
+    * MERGE shuffle width — the `Drain`/`withFixpointWidth` sizing
     * lever applied to the versioned-table kernel: each micro-batch's
     * row_number window and union-merge shuffle a batch-sized frame, and
     * the right width tracks BATCH volume, not the session's scan width.
@@ -580,11 +572,6 @@ object StreamingOps {
     * the width scopes share). */
   def withMergeWidth[T](spark: SparkSession)(body: => T): T =
     spark.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val aqe = "spark.sql.adaptive.enabled"
-      val old = spark.conf.get(key)
-      val oldAqe = spark.conf.get(aqe)
-      spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_MERGE_WIDTH", "4"))
       // adaptive off for the drain scope (the GraphOps.withNoAdaptive
       // rationale): every per-batch merge/fixpoint plan here is
       // batch/delta-sized, and AQE's between-stage replanning is the
@@ -599,12 +586,11 @@ object StreamingOps {
       // duration. SPARK_GRAFT_NO_AQE=0 is the deployment escape hatch
       // (GraphOps.withNoAdaptive): AQE stays on inside the scope, e.g.
       // when a 100 TB delta frame needs skew handling.
-      if (!sys.env.get("SPARK_GRAFT_NO_AQE").contains("0"))
-        spark.conf.set(aqe, "false")
-      try body finally {
-        spark.conf.set(key, old)
-        spark.conf.set(aqe, oldAqe)
-      }
+      val noAqe =
+        if (sys.env.get("SPARK_GRAFT_NO_AQE").contains("0")) Nil
+        else Seq("spark.sql.adaptive.enabled" -> "false")
+      Drain.withConfs(spark, Seq("spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_MERGE_WIDTH", "4")) ++ noAqe)(body)
     }
 
   /** One LWW merge-and-publish step of the versioned upsert table — THE

@@ -139,4 +139,15 @@ class AggregatorsSpec extends AnyFunSuite {
       assert(got == want, s"desc=$desc includeCurrent=$incl")
     }
   }
+
+  test("BandedScan.cumSum fails loudly on a null key instead of dropping it") {
+    import spark.implicits._
+    val df = Seq((Option(1L), 5L), (Option.empty[Long], 7L), (Option(3L), 2L))
+      .toDF("k", "v")
+    val err = intercept[Exception](
+      graft.functions.BandedScan.cumSum(df, "k", "v", "cum").collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+    assert(msgs.exists(_.contains("null key in column k")), err.toString)
+  }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamingOps
+import graft.sources.Tables
+import graft.streaming.{Drain, StreamingOps}
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
@@ -1307,5 +1308,111 @@ class StreamingSpec extends AnyFunSuite {
     // one more version is published but the table value is unchanged
     val (v3, replay) = run(Seq(b1, b1, b2), "replay")
     assert(v3 == 3L && replay == expected)
+  }
+
+
+  test("drains share generated code: a second run of one drain compiles " +
+      "nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run() = SparkEntry.queries("i3b_session_stream")(spark, sf).collect()
+    val first = run()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles == 0, s"second run compiled $compiles classes")
+    assert(first.nonEmpty && first.toSeq == second.toSeq)
+  }
+
+  test("a drain's cloned session drops artifact isolation, unless the " +
+      "session added artifacts; the parent's conf is restored") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    // the conf each micro-batch's (cloned) session actually ran with
+    def cloneIsolation(s: org.apache.spark.sql.SparkSession, tag: String) = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val dir = java.nio.file.Files.createTempDirectory(s"iso_$tag").toString
+      Drain.eachBatch(s, s"$dir/ckpt", Tables.tableStream(s, sf, "events")) {
+        (batch, _) => seen.add(batch.sparkSession.conf.get(key)); ()
+      }
+      seen.toArray.toSet
+    }
+    assert(!Drain.keepsIsolation(spark))
+    assert(cloneIsolation(spark, "plain") == Set("false"))
+    assert(spark.conf.get(key) == "true")
+    // a session with an added jar keeps isolation for its drains
+    val withJar = spark.newSession()
+    val jar = java.nio.file.Files.createTempFile("graft_artifact", ".jar")
+    new java.util.jar.JarOutputStream(
+      java.nio.file.Files.newOutputStream(jar)).close()
+    withJar.addArtifact(jar.toString)
+    assert(Drain.keepsIsolation(withJar))
+    assert(cloneIsolation(withJar, "jar") == Set("true"))
+  }
+
+  test("state width: 1 for the fixture backlog, [2, session width] above " +
+      "maxPartitionBytes, clamped to the session width") {
+    assume(!sys.env.contains("SPARK_GRAFT_DRAIN_WIDTH"))
+    val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val fixture = Tables.streamBacklogBytes(spark, sf, "events")
+    assert(fixture > 0 && fixture < maxBytes)
+    assert(Drain.stateWidth(spark, fixture) == 1)
+    val above = Drain.stateWidth(spark, 2 * maxBytes + 1)
+    assert(above >= 2 && above <= sessionWidth, s"width $above")
+    assert(Drain.stateWidth(0L, maxBytes, sessionWidth) == 1)
+    assert(Drain.stateWidth(100 * maxBytes, maxBytes, sessionWidth) ==
+      sessionWidth)
+  }
+
+  test("the width pinned in a stateful drain's offset log matches the rule") {
+    assume(!sys.env.contains("SPARK_GRAFT_DRAIN_WIDTH"))
+    val bytes = Tables.streamBacklogBytes(spark, sf, "events")
+    val maxKey = "spark.sql.files.maxPartitionBytes"
+    val oldMax = spark.conf.get(maxKey)
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    // the fixture's own size (width 1), and a third of it (width 3)
+    val pinned = Seq(bytes, (bytes + 2) / 3).map { maxBytes =>
+      spark.conf.set(maxKey, maxBytes.toString)
+      try {
+        val want = Drain.stateWidth(spark, bytes)
+        val ckpt = java.nio.file.Files.createTempDirectory("wpin").toString
+        Drain(spark, Drain.StateWidth(bytes))(
+          Tables.tableStream(spark, sf, "events").groupBy("event_type").count()
+            .writeStream.format("memory").queryName(s"wpin_$want")
+            .outputMode("complete").option("checkpointLocation", ckpt))
+        val log = scala.io.Source.fromFile(s"$ckpt/offsets/0").mkString
+        val got = "\"spark.sql.shuffle.partitions\":\"(\\d+)\"".r
+          .findFirstMatchIn(log).map(_.group(1).toInt)
+        assert(got.contains(want), s"offset log pinned $got, rule says $want")
+        want
+      } finally spark.conf.set(maxKey, oldMax)
+    }
+    assert(pinned == Seq(1, 3))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == sessionWidth)
+  }
+
+  test("a second tableStream on the same path starts no Spark job") {
+    val dir = writeEventsFixture(evs)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.GraftBusAccess.drain(spark.sparkContext)
+      jobs.set(0)
+      body
+      org.apache.spark.GraftBusAccess.drain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val first = jobsOf(Tables.tableStream(spark, dir, "events"))
+      val second = jobsOf(Tables.tableStream(spark, dir, "events"))
+      assert(first >= 1, "the first call infers the schema with a job")
+      assert(second == 0, s"second call started $second job(s)")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

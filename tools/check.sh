@@ -6,6 +6,6 @@ set -e -o pipefail
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
-cd /root/repo
+cd "$(dirname "$0")/.."
 sbt --batch "runMain graft.Verify $SF $OUT" 2>&1 | grep -vE '^(Using|copying runtime jar)' | tail -5
 python3 tools/compare.py "$SF" "$OUT"
