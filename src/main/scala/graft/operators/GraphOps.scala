@@ -28,7 +28,7 @@ object GraphOps {
 
   /** Run `body` (an iterative-fixpoint BUILD: kcore/LPA rounds, the
     * components loop) with the shuffle width right-sized for vertex-sized
-    * frames — the `Drain.stateWidth` rationale applied to graph fixpoints.
+    * frames — the `Drain.StateWidth` rationale applied to graph fixpoints.
     * Each round's survivor/label frame is |V|-sized however big the
     * corpus, and every round pays per-partition stage orchestration: at
     * the batch session's width 32 that overhead dominated (gr_kcore

@@ -55,9 +55,16 @@ object Tables {
   /** Streaming form of [[table]]: the same parquet read as a file-source
     * stream, with the same timestamp folding. File streams require an
     * explicit schema, so it is pinned from a batch scan of the same path
-    * (once per session and path) — at scale the file source incrementally
-    * lists and processes new files under the directory, which is exactly
-    * the landing-zone ingest shape.
+    * — at scale the file source incrementally lists and processes new files
+    * under the directory, which is exactly the landing-zone ingest shape.
+    *
+    * The schema is fixed for the session, as [[table]]'s listing is: it is
+    * inferred once per (session, path) and kept until
+    * `CacheRegistry.releaseAll`. A file that lands later with an evolved
+    * schema (say a new nullable column) is read with the pinned one — its
+    * extra column is dropped, silently. A landing zone whose schema
+    * evolves must pass its schema explicitly, or release the registry
+    * between generations.
     *
     * Layout-robust: the fixture has historically been ONE FILE named
     * `<name>.parquet` per table (monitor the shared dir, glob-filtered to
@@ -93,14 +100,6 @@ object Tables {
 
   private def streamSchema(s: SparkSession, path: String) =
     streamSchemaMemo.computeIfAbsent((s, path), _ => s.read.parquet(path).schema)
-
-  /** Bytes a [[tableStream]] of `name` starts from (the file, or every file
-    * under a table directory): a file-system call, no Spark job. */
-  def streamBacklogBytes(s: SparkSession, dir: String, name: String): Long = {
-    val hp = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getContentSummary(hp).getLength
-  }
 
   private def eventsRaw(s: SparkSession, d: String): DataFrame =
     tableMemo.computeIfAbsent((s, d, "events"), { _ =>

@@ -23,10 +23,6 @@ import graft.sources.Tables
   */
 object StreamingGraded {
 
-  /** The width a stateful drain over the `name` table stream runs at. */
-  private def stateOf(s: SparkSession, d: String, name: String = "events") =
-    Drain.StateWidth(Tables.streamBacklogBytes(s, d, name))
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // The streaming admission gate (dd_incremental's arrival-time form at
@@ -65,7 +61,7 @@ object StreamingGraded {
         .select(
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
           col("event_type"), col("n"))
-      Drain.toMemory(s, agg, "i4_watermark_sink", "append", stateOf(s, d))
+      Drain.toMemory(s, agg, "i4_watermark_sink", "append", Drain.StateWidth)
         .orderBy("hour_start", "event_type")
     }),
 
@@ -85,7 +81,7 @@ object StreamingGraded {
     "i14_stream_join" -> ((s, d) => {
       val joined = StreamingOps.clickToPurchaseLeftJoin(
         Tables.tableStream(s, d, "events"))
-      Drain.toMemory(s, joined, "i14_stream_join_sink", "append", stateOf(s, d))
+      Drain.toMemory(s, joined, "i14_stream_join_sink", "append", Drain.StateWidth)
         .select(col("click_id"), col("user_id"),
           expr("unix_micros(click_ts)").as("click_us"),
           col("purchase_id"),
@@ -106,7 +102,7 @@ object StreamingGraded {
     // bounded-state trade never bites here.
     "e8b_retention_stream" -> ((s, d) => {
       val deltas = StreamingOps.retentionDeltas(Tables.tableStream(s, d, "events"))
-      Drain.toMemory(s, deltas, "e8b_retention_sink", "append", stateOf(s, d))
+      Drain.toMemory(s, deltas, "e8b_retention_sink", "append", Drain.StateWidth)
         .groupBy("cohort_us", "week_offset")
         .agg(sum(col("delta")).as("active_users"))
         .filter(col("active_users") =!= 0)
@@ -134,7 +130,7 @@ object StreamingGraded {
           unix_micros(col("ts")).as("us"))
         .as[StreamingOps.UserEvent]
       val prog = StreamingOps.funnelStages(ev, Seq("view", "click", "purchase"))
-      Drain.toMemory(s, prog, "e7b_funnel_sink", "update", stateOf(s, d))
+      Drain.toMemory(s, prog, "e7b_funnel_sink", "update", Drain.StateWidth)
         .groupBy("user_id")
         .agg(max(col("stage")).cast("int").as("stage"))
         .orderBy("user_id")
@@ -163,7 +159,7 @@ object StreamingGraded {
       val changes = StreamingOps.syncChanges(delta, target)
       val last = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n_delta").desc)
-      Drain.toMemory(s, changes, "i11b_sync_sink", "update", stateOf(s, d))
+      Drain.toMemory(s, changes, "i11b_sync_sink", "update", Drain.StateWidth)
         .withColumn("rn", row_number().over(last)).filter(col("rn") === 1)
         .select(col("user_id"), col("new_type"), col("change"), col("n_delta"))
         .orderBy("user_id")
@@ -189,7 +185,7 @@ object StreamingGraded {
       val alarms = StreamingOps.volumeAlarms(Tables.tableStream(s, d, "events"))
       val last = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type", "day").orderBy(col("batch_seq").desc)
-      Drain.toSpool(s, tmp, alarms, stateOf(s, d), "update")(
+      Drain.toSpool(s, tmp, alarms, Drain.StateWidth, "update")(
         (batch, id) => batch.withColumn("batch_seq", lit(id)))
         .withColumn("rn", row_number().over(last)).filter(col("rn") === 1)
         .select(col("event_type"), col("day"), col("n"), col("base7"),
@@ -223,7 +219,7 @@ object StreamingGraded {
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
         .agg(sum(graft.functions.ExactNum.tenK(col("value"))).as("xt"))
       val drained =
-        Drain.toMemory(s, daily, "e18b_cusum_sink", "complete", stateOf(s, d))
+        Drain.toMemory(s, daily, "e18b_cusum_sink", "complete", Drain.StateWidth)
       // detach the sink view before the detector: cusumOf self-references
       // its input (daily ⋈ per-type stats), and MemoryPlan views reuse the
       // same attribute ids on both sides — a fresh DataFrame over the
@@ -237,7 +233,7 @@ object StreamingGraded {
 
     "e9b_quantiles_stream" -> ((s, d) => {
       val q = StreamingOps.weeklyValueQuantiles(Tables.tableStream(s, d, "events"))
-      Drain.toMemory(s, q, "e9b_quantiles_sink", "complete", stateOf(s, d))
+      Drain.toMemory(s, q, "e9b_quantiles_sink", "complete", Drain.StateWidth)
         .orderBy("wk", "event_type")
     }),
 
@@ -589,7 +585,7 @@ object StreamingGraded {
           unix_micros(col("sw.start")).as("start_us"),
           unix_micros(col("sw.end")).as("end_us"),
           col("n_events"))
-      Drain.toMemory(s, sess, "i3b_session_sink", "append", stateOf(s, d))
+      Drain.toMemory(s, sess, "i3b_session_sink", "append", Drain.StateWidth)
         .orderBy("user_id", "start_us")
     }),
 
@@ -701,8 +697,7 @@ object StreamingGraded {
       val docs = Tables.tableStream(s, d, "documents")
         .withColumn("ts", lit("2024-01-01 10:00:00").cast("timestamp"))
       val kept = StreamingOps.dedupBySimhash(docs)
-      Drain.toMemory(s, kept, "dd_simhash_sink", "append",
-          stateOf(s, d, "documents"))
+      Drain.toMemory(s, kept, "dd_simhash_sink", "append", Drain.StateWidth)
         .groupBy("simhash")
         .agg(count(lit(1)).as("survivors"))
         .orderBy("simhash")

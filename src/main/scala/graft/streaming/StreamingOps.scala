@@ -572,25 +572,7 @@ object StreamingOps {
     * the width scopes share). */
   def withMergeWidth[T](spark: SparkSession)(body: => T): T =
     spark.synchronized {
-      // adaptive off for the drain scope (the GraphOps.withNoAdaptive
-      // rationale): every per-batch merge/fixpoint plan here is
-      // batch/delta-sized, and AQE's between-stage replanning is the
-      // dominant per-batch cost at any data size — the streaming plan
-      // itself already runs without AQE, this extends that to the
-      // foreachBatch bodies the streaming thread plans (conf is
-      // session-global, so the scope covers them without the streaming
-      // thread ever taking this monitor — the deadlock rule). The
-      // session-global flip assumes the single-driver/one-query-at-a-time
-      // contract every width scope shares: an unrelated batch query
-      // planned on this session mid-drain would lose AQE for its
-      // duration. SPARK_GRAFT_NO_AQE=0 is the deployment escape hatch
-      // (GraphOps.withNoAdaptive): AQE stays on inside the scope, e.g.
-      // when a 100 TB delta frame needs skew handling.
-      val noAqe =
-        if (sys.env.get("SPARK_GRAFT_NO_AQE").contains("0")) Nil
-        else Seq("spark.sql.adaptive.enabled" -> "false")
-      Drain.withConfs(spark, Seq("spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_MERGE_WIDTH", "4")) ++ noAqe)(body)
+      Drain.withConfs(spark, Drain.mergeConfs)(body)
     }
 
   /** One LWW merge-and-publish step of the versioned upsert table — THE

@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.graftexpr.SessionArtifacts
+
 import graft.sources.Tables
 import graft.streaming.{Drain, StreamingOps}
 
@@ -1335,7 +1337,7 @@ class StreamingSpec extends AnyFunSuite {
       }
       seen.toArray.toSet
     }
-    assert(!Drain.keepsIsolation(spark))
+    assert(!SessionArtifacts.added(spark))
     assert(cloneIsolation(spark, "plain") == Set("false"))
     assert(spark.conf.get(key) == "true")
     // a session with an added jar keeps isolation for its drains
@@ -1344,50 +1346,23 @@ class StreamingSpec extends AnyFunSuite {
     new java.util.jar.JarOutputStream(
       java.nio.file.Files.newOutputStream(jar)).close()
     withJar.addArtifact(jar.toString)
-    assert(Drain.keepsIsolation(withJar))
+    assert(SessionArtifacts.added(withJar))
     assert(cloneIsolation(withJar, "jar") == Set("true"))
   }
 
-  test("state width: 1 for the fixture backlog, [2, session width] above " +
-      "maxPartitionBytes, clamped to the session width") {
+  test("a stateful drain pins width 1 into its offset log and restores " +
+      "the session's width") {
     assume(!sys.env.contains("SPARK_GRAFT_DRAIN_WIDTH"))
-    val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val fixture = Tables.streamBacklogBytes(spark, sf, "events")
-    assert(fixture > 0 && fixture < maxBytes)
-    assert(Drain.stateWidth(spark, fixture) == 1)
-    val above = Drain.stateWidth(spark, 2 * maxBytes + 1)
-    assert(above >= 2 && above <= sessionWidth, s"width $above")
-    assert(Drain.stateWidth(0L, maxBytes, sessionWidth) == 1)
-    assert(Drain.stateWidth(100 * maxBytes, maxBytes, sessionWidth) ==
-      sessionWidth)
-  }
-
-  test("the width pinned in a stateful drain's offset log matches the rule") {
-    assume(!sys.env.contains("SPARK_GRAFT_DRAIN_WIDTH"))
-    val bytes = Tables.streamBacklogBytes(spark, sf, "events")
-    val maxKey = "spark.sql.files.maxPartitionBytes"
-    val oldMax = spark.conf.get(maxKey)
     val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    // the fixture's own size (width 1), and a third of it (width 3)
-    val pinned = Seq(bytes, (bytes + 2) / 3).map { maxBytes =>
-      spark.conf.set(maxKey, maxBytes.toString)
-      try {
-        val want = Drain.stateWidth(spark, bytes)
-        val ckpt = java.nio.file.Files.createTempDirectory("wpin").toString
-        Drain(spark, Drain.StateWidth(bytes))(
-          Tables.tableStream(spark, sf, "events").groupBy("event_type").count()
-            .writeStream.format("memory").queryName(s"wpin_$want")
-            .outputMode("complete").option("checkpointLocation", ckpt))
-        val log = scala.io.Source.fromFile(s"$ckpt/offsets/0").mkString
-        val got = "\"spark.sql.shuffle.partitions\":\"(\\d+)\"".r
-          .findFirstMatchIn(log).map(_.group(1).toInt)
-        assert(got.contains(want), s"offset log pinned $got, rule says $want")
-        want
-      } finally spark.conf.set(maxKey, oldMax)
-    }
-    assert(pinned == Seq(1, 3))
+    val ckpt = java.nio.file.Files.createTempDirectory("wpin").toString
+    Drain(spark, Drain.StateWidth)(
+      Tables.tableStream(spark, sf, "events").groupBy("event_type").count()
+        .writeStream.format("memory").queryName("wpin_sink")
+        .outputMode("complete").option("checkpointLocation", ckpt))
+    val log = scala.io.Source.fromFile(s"$ckpt/offsets/0").mkString
+    val pinned = "\"spark.sql.shuffle.partitions\":\"(\\d+)\"".r
+      .findFirstMatchIn(log).map(_.group(1).toInt)
+    assert(pinned.contains(1), s"offset log pinned $pinned")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == sessionWidth)
   }
 
