@@ -1,26 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** One-line physical-plan fingerprint per graded query — the data source for
-  * PlanShapeSpec's pinned invariants. Flags: join strategy chosen, parquet
-  * filter pushdown, shuffle presence, whole-stage-codegen presence.
+/** Physical-plan inspection of the graded queries (SURVEY.md §4). With no
+  * query names: a one-line fingerprint per registry query — the data
+  * source for PlanShapeSpec's pinned invariants. With names: each named
+  * query's `explain("formatted")`, then the same line. Flags: join
+  * strategy chosen, parquet filter pushdown, shuffle presence,
+  * whole-stage-codegen presence.
   *
-  * Usage: sbt "runMain graft.PlanSurvey [sfDir]"
+  * Usage: sbt "runMain graft.PlanSurvey [sfDir] [queryName ...]"
   */
 object PlanSurvey {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val names = args.drop(1).toSeq
+    val spark = SparkEntry.localSession("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
+    val queries = SparkEntry.queries
+    (if (names.isEmpty) queries.keys.toSeq.sorted else names).foreach { n =>
       try {
-        val df = fn(spark, sfDir)
+        val df = queries(n)(spark, sfDir)
+        if (names.nonEmpty)
+          println(s"\n========== $n ==========\n" +
+            df.queryExecution.explainString(FormattedMode))
         df.collect() // finalize AQE so the executed plan is the real one
         val p = df.queryExecution.executedPlan.toString
         val flags = Seq(

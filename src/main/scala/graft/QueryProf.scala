@@ -1,10 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level profile of a registry query — the measurement companion to
-  * PlanAudit (which shows the plan SHAPE): how many Spark jobs one timed
+  * PlanSurvey (which shows the plan SHAPE): how many Spark jobs one timed
   * execution runs and where the wall-clock goes, for queries whose cost is
   * a ladder of small jobs (iterative fixpoints, streaming drains, staged
   * publishes) rather than one big scan. Mirrors Bench's timing contract:
@@ -18,15 +17,10 @@ object QueryProf {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("dd_components_incr"))
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // ad-hoc conf overrides for A/B runs: QUERYPROF_CONF="k=v;k2=v2"
     val spark = sys.env.get("QUERYPROF_CONF").map(_.split(";").toSeq)
       .getOrElse(Seq.empty)
-      .foldLeft(b) { (acc, kv) =>
+      .foldLeft(SparkEntry.localSession("32")) { (acc, kv) =>
         val Array(k, v) = kv.split("=", 2); acc.config(k, v)
       }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

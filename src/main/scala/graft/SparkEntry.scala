@@ -48,4 +48,12 @@ object SparkEntry {
     CoreRelational.oracle ++ WindowedAnalytics.oracle ++ TemporalOps.oracle ++
       LlmOps.oracle ++ Lsh.oracle ++ TrainingPipeline.oracle ++
       graft.streaming.StreamingGraded.oracle
+
+  /** The session every main runs on: `local[cpus]`, shuffle width `cpus`,
+    * UTC, UI off. */
+  def localSession(cpus: String): SparkSession.Builder =
+    SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
 }

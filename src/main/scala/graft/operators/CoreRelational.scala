@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Q
+import graft.{ConfScope, Q}
 import graft.functions.ExactNum._
 import graft.sources.Tables._
 
@@ -73,7 +73,7 @@ object CoreRelational {
     val t1 = lit("2024-01-10 00:00:00").cast("timestamp")
     val t2 = lit("2024-01-20 00:00:00").cast("timestamp")
     val late = col("user_id") % 7 === 0
-    graft.streaming.StreamingOps.withMergeWidth(s) {
+    ConfScope(s, ConfScope.Merge) {
       Seq(!late && col("ts") < t1,
           !late && col("ts") >= t1 && col("ts") < t2,
           late || col("ts") >= t2)
@@ -508,8 +508,8 @@ object CoreRelational {
     // string compiled to Catalyst predicates by graft.api.EncodedQuery.
     // `^OR` groups bind before `^` (AND), exactly as the Table API evaluates
     // them; ORDERBY comes from the same string. The compiled filter is an
-    // ordinary predicate tree, so parquet pushdown applies (PlanAudit checks
-    // b-group scans for PushedFilters).
+    // ordinary predicate tree, so parquet pushdown applies (PlanSurvey flags
+    // b-group scans with PushedFilters as PUSH).
     "b8_encoded_query" -> ((s, d) =>
       graft.api.EncodedQuery.applyTo(
         orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice",
@@ -804,10 +804,10 @@ object CoreRelational {
     // restartable mid-iteration); each round is one |E|⋈|V| equi-join +
     // a partial-aggregable min — O(|E|) shuffled rows per round at any
     // corpus size, never frontier-squared.
-    // withFixpointWidth: iterative builder over vertex-sized frames — and
+    // ConfScope.Fixpoint: iterative builder over vertex-sized frames — and
     // the scope's AQE-off keeps each round's lazy localCheckpoint from
     // executing stages at plan build (the gr_kcore audit class)
-    "gr_sssp" -> ((s, d) => GraphOps.withFixpointWidth(s) {
+    "gr_sssp" -> ((s, d) => ConfScope(s, ConfScope.Fixpoint) {
       val e = knnEdges(s, d)
       val ew = e.select(col("src").as("u"), col("dst").as("v"), col("w"))
         .union(e.select(col("dst").as("u"), col("src").as("v"), col("w")))
@@ -831,11 +831,11 @@ object CoreRelational {
     // frames are materialized per round so the unrolled tree never
     // re-executes earlier rounds. Output: survivors with their degree in
     // the final surviving subgraph — all integers, hash-exact.
-    // wrapped in withFixpointWidth: the rounds EXECUTE here (the lazy
+    // in ConfScope.Fixpoint: the rounds EXECUTE here (the lazy
     // localCheckpoint's toRdd materializes each round's stages under AQE),
     // and survivor frames are |V|-sized — batch width 32 was pure stage
-    // overhead (4.8 s → 1.5 s at sf0.1, see GraphOps.withFixpointWidth)
-    "gr_kcore" -> ((s, d) => GraphOps.withFixpointWidth(s) {
+    // overhead (4.8 s → 1.5 s at sf0.1, see ConfScope.Fixpoint)
+    "gr_kcore" -> ((s, d) => ConfScope(s, ConfScope.Fixpoint) {
       val e = knnEdges(s, d)
       val ed = graft.CacheRegistry.materialize(
         e.select(col("src").as("u"), col("dst").as("v"))
@@ -876,9 +876,9 @@ object CoreRelational {
     // Bounded rounds are the point: community assignment stabilizes in
     // O(1) rounds on degree-capped graphs, and a bounded unroll is
     // oracle-mirrorable CTE by CTE.
-    // wrapped in withFixpointWidth like gr_kcore: the two synchronous LPA
+    // in ConfScope.Fixpoint like gr_kcore: the two synchronous LPA
     // rounds execute at build over |V|-sized label frames
-    "gr_lpa" -> ((s, d) => GraphOps.withFixpointWidth(s) {
+    "gr_lpa" -> ((s, d) => ConfScope(s, ConfScope.Fixpoint) {
       val e = knnEdges(s, d)
       val ed = graft.CacheRegistry.materialize(
         e.select(col("src").as("u"), col("dst").as("v"))

@@ -26,61 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Run `body` (an iterative-fixpoint BUILD: kcore/LPA rounds, the
-    * components loop) with the shuffle width right-sized for vertex-sized
-    * frames — the `Drain.StateWidth` rationale applied to graph fixpoints.
-    * Each round's survivor/label frame is |V|-sized however big the
-    * corpus, and every round pays per-partition stage orchestration: at
-    * the batch session's width 32 that overhead dominated (gr_kcore
-    * 4.8 s → 1.5 s, gr_lpa 1.3 s → 0.7 s, components 1.3 s → 0.9 s at
-    * sf0.1; width 8 is past the knee, 4 measured equal). The env knob is
-    * the per-deployment sizing lever — at 100 TB this is sized UP with
-    * |V|, independent of the batch width. Synchronized on the session and
-    * restored before returning (same single-driver contract as
-    * graft.streaming.Drain); results are width-independent by
-    * design — min-label, ±votes and integer ranks are order-free
-    * aggregates, pinned by the oracle gate at two widths (tests run at 4,
-    * Verify/Bench at this knob).
-    */
-  private[graft] def withFixpointWidth[T](s: org.apache.spark.sql.SparkSession)(
-      body: => T): T = s.synchronized {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_FIXPOINT_WIDTH", "8"))
-    try withNoAdaptive(s)(body) finally s.conf.set(key, old)
-  }
-
-  /** Run `body` (an ITERATIVE builder over model/delta-sized frames) with
-    * adaptive query execution off — the companion knob to the width
-    * scopes. AQE re-optimizes between every stage and re-plans each
-    * localCheckpoint leaf at plan build; on a fixpoint that runs dozens of
-    * model-sized stages per query, that replanning is the dominant cost
-    * and buys nothing (there is no skew or partition sizing to adapt on a
-    * 64-row or delta-sized frame). Measured at sf0.1 (QueryProf):
-    * dd_components_incr 3.9 → 1.8 s wall (37 → 5 jobs), emb_pca_topk
-    * 2.0 → 1.7 s, ta_bpe_compress 2.7 → 2.0 s. Results are AQE-independent
-    * by construction; the big corpus-scan queries keep AQE (coalescing /
-    * skew handling is exactly right for them — guide §2). Reentrant on the
-    * driver thread (session monitor), restored on exit.
-    *
-    * SPARK_GRAFT_NO_AQE is the deployment escape hatch (the same
-    * env-knob convention as the width scopes): at 100 TB a delta or
-    * contraction frame after a bad day can be arbitrarily large, and an
-    * operator losing AQE's skew handling with no lever would be a
-    * config-only trick. `SPARK_GRAFT_NO_AQE=0` keeps AQE ON inside every
-    * scope (results are identical by construction — the oracle gate is
-    * green both ways); default unchanged. */
-  private[graft] def withNoAdaptive[T](s: org.apache.spark.sql.SparkSession)(
-      body: => T): T = s.synchronized {
-    if (sys.env.get("SPARK_GRAFT_NO_AQE").contains("0")) body
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val old = s.conf.get(key)
-      s.conf.set(key, "false")
-      try body finally s.conf.set(key, old)
-    }
-  }
-
   /** @param vertices one column `id`; @param edges columns `src`, `dst`
     *  (directed; pass both directions for an undirected graph).
     * @return (id, comp) where comp = min vertex id reachable. */
@@ -232,7 +177,7 @@ object GraphOps {
       // (dd_blast_radius spent ~1.8 s of a 2.0 s wall in the analyzer on
       // a 3^rounds tree — the gr_sssp plan-blowup class); the lazy
       // checkpoint truncates to an RDD leaf with the same computed-once,
-      // block-cached execution. Callers hold AQE off (withFixpointWidth)
+      // block-cached execution. Callers hold AQE off (ConfScope.Fixpoint)
       // so the checkpoint's toRdd stays lazy at plan build.
       reached = reached.union(next).localCheckpoint(eager = false)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{ConfScope, Q}
 import graft.functions.ExactNum._
 import graft.sources.Tables._
 
@@ -295,7 +295,13 @@ object LlmOps {
     * full-rewrite form cost two ~0.85 s jobs per refresh (the old rows
     * re-written and re-aggregated), and at 100 TB a full rewrite per
     * increment is exactly the anti-pattern the a12 compaction job exists
-    * to amortize (fold deltas periodically; this reader unions them). */
+    * to amortize (fold deltas periodically; this reader unions them).
+    *
+    * Upgrade path: a root without the `_LAYOUT` marker is refused, so a
+    * root written before the marker existed is unreadable by design (and
+    * cannot be refreshed either: the publish reads it first). There is no
+    * migration; rebuild it from v0 with [[writeShingleArtifact]], which
+    * stamps the marker (BASELINE.md, "Stored-artifact upgrade path"). */
   private[graft] def storedShingleRows(s: org.apache.spark.sql.SparkSession,
       root: String, v: Long,
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
@@ -400,10 +406,9 @@ object LlmOps {
 
   private[graft] def componentsOf(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     componentsMemo.getOrElseUpdate((s, d),
-      // withFixpointWidth: the verified-fixpoint rounds run HERE (label
-      // frames are |V|-sized; measured 1.3 s → 0.9 s at sf0.1 — see
-      // GraphOps.withFixpointWidth)
-      GraphOps.withFixpointWidth(s) {
+      // ConfScope.Fixpoint: the verified-fixpoint rounds run HERE (label
+      // frames are |V|-sized; measured 1.3 s → 0.9 s at sf0.1)
+      ConfScope(s, ConfScope.Fixpoint) {
         GraphOps.minLabelComponents(
           documents(s, d).select(col("doc_id").as("id")),
           jaccardPairs(s, d, 0.3)
@@ -447,7 +452,7 @@ object LlmOps {
     * the shared τ=0.3 pair frame, session-memoized as PREP. */
   private[graft] def storedOldLabels(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    storedLabelsMemo.getOrElseUpdate((s, d), GraphOps.withFixpointWidth(s) {
+    storedLabelsMemo.getOrElseUpdate((s, d), ConfScope(s, ConfScope.Fixpoint) {
       graft.CacheRegistry.materialize(
         GraphOps.minLabelComponents(
           documents(s, d).filter(!isNewDoc(col("doc_id")))
@@ -854,9 +859,9 @@ object LlmOps {
   private def bpeRoundsOf(s: org.apache.spark.sql.SparkSession, d: String)
       : (DataFrame, DataFrame) =
     bpeMemo.getOrElseUpdate((s, d),
-      // deliberately NOT withNoAdaptive (unlike the graph/PCA fixpoints):
-      // the BPE rounds are CORPUS-sized window passes, not model-sized
-      // frames, so AQE's coalescing is the right default here. A/B'd in
+      // deliberately NOT ConfScope.NoAdaptive (unlike the graph/PCA
+      // fixpoints): the BPE rounds are CORPUS-sized window passes, not
+      // model-sized frames, so AQE's coalescing is the right default. A/B'd in
       // the r10 bench (min-of-5, family = merge + compress since the
       // build is shared): 3.08/3.87 s with AQE across two runs vs 3.62 s
       // without — within the family's run-to-run noise (checkpointed
@@ -1107,7 +1112,7 @@ object LlmOps {
       // starts from — session-memoized PREP (the shared-input-spool
       // rule), so Bench's per-pass rebuilds time the incremental work,
       // not a re-simulation of history; cleared with the cache registry
-      GraphOps.withFixpointWidth(s) {
+      ConfScope(s, ConfScope.Fixpoint) {
         GraphOps.incrementalComponents(
           storedOldLabels(s, d),
           documents(s, d).filter(isNewDoc(col("doc_id")))
@@ -1167,10 +1172,10 @@ object LlmOps {
     // from the graph guarantees the graded rows exercise real traversal,
     // not just the depth-0 echo); edges ride the cached τ=0.3 pair frame
     // that dd_components already builds.
-    // withFixpointWidth: iterative builder over pair-graph-sized frames —
+    // ConfScope.Fixpoint: iterative builder over pair-graph-sized frames —
     // and the scope's AQE-off keeps each round's lazy localCheckpoint from
     // executing stages at plan build (the gr_kcore audit class)
-    "dd_blast_radius" -> ((s, d) => GraphOps.withFixpointWidth(s) {
+    "dd_blast_radius" -> ((s, d) => ConfScope(s, ConfScope.Fixpoint) {
       val e = jaccardPairs(s, d, 0.3)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val bi = e.union(e.select(col("dst").as("src"), col("src").as("dst")))

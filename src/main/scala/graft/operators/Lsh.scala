@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{ConfScope, Q}
 import graft.functions.ExactNum._
 import graft.sources.Tables._
 
@@ -130,12 +130,12 @@ object Lsh {
   private def pcaBasisOf(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
     basisMemo.getOrElseUpdate((s, d),
-      // withNoAdaptive: everything past the one corpus covariance pass is
+      // ConfScope.NoAdaptive: everything past the one corpus covariance pass is
       // 64×64 iterative arithmetic (9 power rounds + deflation), where
       // AQE's between-stage replanning and per-checkpoint build execution
       // dominate — measured 2.0 → 1.7 s wall at sf0.1 with identical rows
-      // (see GraphOps.withNoAdaptive)
-      graft.operators.GraphOps.withNoAdaptive(s) {
+      // (see ConfScope.NoAdaptive)
+      ConfScope(s, ConfScope.NoAdaptive) {
         graft.CacheRegistry.materializeShared(pcaTopkOf(embeddings(s, d)))
       })
 

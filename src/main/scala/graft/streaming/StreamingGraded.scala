@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ConfScope
 import graft.sources.Tables
 
 /** Driver-graded queries that EXECUTE the Structured Streaming surface —
@@ -61,7 +62,7 @@ object StreamingGraded {
         .select(
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
           col("event_type"), col("n"))
-      Drain.toMemory(s, agg, "i4_watermark_sink", "append", Drain.StateWidth)
+      Drain.toMemory(s, agg, "i4_watermark_sink", "append", ConfScope.State)
         .orderBy("hour_start", "event_type")
     }),
 
@@ -81,7 +82,7 @@ object StreamingGraded {
     "i14_stream_join" -> ((s, d) => {
       val joined = StreamingOps.clickToPurchaseLeftJoin(
         Tables.tableStream(s, d, "events"))
-      Drain.toMemory(s, joined, "i14_stream_join_sink", "append", Drain.StateWidth)
+      Drain.toMemory(s, joined, "i14_stream_join_sink", "append", ConfScope.State)
         .select(col("click_id"), col("user_id"),
           expr("unix_micros(click_ts)").as("click_us"),
           col("purchase_id"),
@@ -102,7 +103,7 @@ object StreamingGraded {
     // bounded-state trade never bites here.
     "e8b_retention_stream" -> ((s, d) => {
       val deltas = StreamingOps.retentionDeltas(Tables.tableStream(s, d, "events"))
-      Drain.toMemory(s, deltas, "e8b_retention_sink", "append", Drain.StateWidth)
+      Drain.toMemory(s, deltas, "e8b_retention_sink", "append", ConfScope.State)
         .groupBy("cohort_us", "week_offset")
         .agg(sum(col("delta")).as("active_users"))
         .filter(col("active_users") =!= 0)
@@ -130,7 +131,7 @@ object StreamingGraded {
           unix_micros(col("ts")).as("us"))
         .as[StreamingOps.UserEvent]
       val prog = StreamingOps.funnelStages(ev, Seq("view", "click", "purchase"))
-      Drain.toMemory(s, prog, "e7b_funnel_sink", "update", Drain.StateWidth)
+      Drain.toMemory(s, prog, "e7b_funnel_sink", "update", ConfScope.State)
         .groupBy("user_id")
         .agg(max(col("stage")).cast("int").as("stage"))
         .orderBy("user_id")
@@ -159,7 +160,7 @@ object StreamingGraded {
       val changes = StreamingOps.syncChanges(delta, target)
       val last = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n_delta").desc)
-      Drain.toMemory(s, changes, "i11b_sync_sink", "update", Drain.StateWidth)
+      Drain.toMemory(s, changes, "i11b_sync_sink", "update", ConfScope.State)
         .withColumn("rn", row_number().over(last)).filter(col("rn") === 1)
         .select(col("user_id"), col("new_type"), col("change"), col("n_delta"))
         .orderBy("user_id")
@@ -185,7 +186,7 @@ object StreamingGraded {
       val alarms = StreamingOps.volumeAlarms(Tables.tableStream(s, d, "events"))
       val last = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type", "day").orderBy(col("batch_seq").desc)
-      Drain.toSpool(s, tmp, alarms, Drain.StateWidth, "update")(
+      Drain.toSpool(s, tmp, alarms, ConfScope.State, "update")(
         (batch, id) => batch.withColumn("batch_seq", lit(id)))
         .withColumn("rn", row_number().over(last)).filter(col("rn") === 1)
         .select(col("event_type"), col("day"), col("n"), col("base7"),
@@ -219,7 +220,7 @@ object StreamingGraded {
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
         .agg(sum(graft.functions.ExactNum.tenK(col("value"))).as("xt"))
       val drained =
-        Drain.toMemory(s, daily, "e18b_cusum_sink", "complete", Drain.StateWidth)
+        Drain.toMemory(s, daily, "e18b_cusum_sink", "complete", ConfScope.State)
       // detach the sink view before the detector: cusumOf self-references
       // its input (daily ⋈ per-type stats), and MemoryPlan views reuse the
       // same attribute ids on both sides — a fresh DataFrame over the
@@ -233,7 +234,7 @@ object StreamingGraded {
 
     "e9b_quantiles_stream" -> ((s, d) => {
       val q = StreamingOps.weeklyValueQuantiles(Tables.tableStream(s, d, "events"))
-      Drain.toMemory(s, q, "e9b_quantiles_sink", "complete", Drain.StateWidth)
+      Drain.toMemory(s, q, "e9b_quantiles_sink", "complete", ConfScope.State)
         .orderBy("wk", "event_type")
     }),
 
@@ -348,7 +349,7 @@ object StreamingGraded {
         p => ev.repartition(4).write.mode("overwrite").parquet(p))
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(spool)
-      Drain.eachBatch(s, s"$tmp/ckpt", stream, Drain.MergeWidth) { (batch, _) =>
+      Drain.eachBatch(s, s"$tmp/ckpt", stream, ConfScope.Merge) { (batch, _) =>
         StreamingOps.applyUpsertBatchStaged(s, batch, s"$tmp/table") {
           (verDir, cur) =>
             val feed =
@@ -450,7 +451,7 @@ object StreamingGraded {
       // per-batch frame here is delta-sized, and the session's batch
       // width would pay 32 shuffle partitions of pure scheduling per
       // join/fixpoint round (measured 14.3 s → 4.4 s at sf0.01)
-      Drain.eachBatch(s, s"$tmp/ckpt", stream, Drain.MergeWidth) { (batch, _) =>
+      Drain.eachBatch(s, s"$tmp/ckpt", stream, ConfScope.Merge) { (batch, _) =>
         StreamingOps.applyComponentsBatch(s, tmp, newPairs, batch,
           LlmOps.isNewDoc)
       }
@@ -509,7 +510,7 @@ object StreamingGraded {
         .option("maxFilesPerTrigger", "2").parquet(spool)
       // merge width around the drain: the per-batch windows are per-doc
       // over a 4-file increment spool — batch width pays pure scheduling
-      Drain.toSpool(s, tmp, stream, Drain.MergeWidth)(
+      Drain.toSpool(s, tmp, stream, ConfScope.Merge)(
         (batch, _) => LlmOps.bpeEncodePrepared(batch, winRow))
         .orderBy("doc_id")
     }),
@@ -585,7 +586,7 @@ object StreamingGraded {
           unix_micros(col("sw.start")).as("start_us"),
           unix_micros(col("sw.end")).as("end_us"),
           col("n_events"))
-      Drain.toMemory(s, sess, "i3b_session_sink", "append", Drain.StateWidth)
+      Drain.toMemory(s, sess, "i3b_session_sink", "append", ConfScope.State)
         .orderBy("user_id", "start_us")
     }),
 
@@ -662,7 +663,7 @@ object StreamingGraded {
       // merge width around the drain: per-batch frames are batch-sized
       // (assignment join + the snapshot union), session width pays pure
       // scheduling per micro-batch
-      Drain.eachBatch(s, s"$tmp/ckpt", stream, Drain.MergeWidth) {
+      Drain.eachBatch(s, s"$tmp/ckpt", stream, ConfScope.Merge) {
         (batch, _) => StreamingOps.maintainIvfBatch(s, tmp, cents, batch)
       }
       val fin = StreamingOps.readVersionPointer(s, s"$tmp/index").get
@@ -697,7 +698,7 @@ object StreamingGraded {
       val docs = Tables.tableStream(s, d, "documents")
         .withColumn("ts", lit("2024-01-01 10:00:00").cast("timestamp"))
       val kept = StreamingOps.dedupBySimhash(docs)
-      Drain.toMemory(s, kept, "dd_simhash_sink", "append", Drain.StateWidth)
+      Drain.toMemory(s, kept, "dd_simhash_sink", "append", ConfScope.State)
         .groupBy("simhash")
         .agg(count(lit(1)).as("survivors"))
         .orderBy("simhash")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.ConfScope
+
 /** Structured Streaming forms of the SURVEY.md §2 I-group operators — the
   * CMDB sync loop as an actual stream (the batch twins in
   * graft.operators.TemporalOps are the oracle-graded forms; these are the
@@ -549,30 +551,8 @@ object StreamingOps {
     */
   def runUpsertSinkToParquet(spark: SparkSession, events: Dataset[_],
       checkpoint: String, target: String): Unit =
-    Drain.eachBatch(spark, checkpoint, events, Drain.MergeWidth, "update") {
+    Drain.eachBatch(spark, checkpoint, events, ConfScope.Merge, "update") {
       (batch, _) => applyUpsertBatch(spark, batch, target)
-    }
-
-  /** Run `body` (a bounded sequence of per-batch LWW merges) at the
-    * MERGE shuffle width — the `Drain`/`withFixpointWidth` sizing
-    * lever applied to the versioned-table kernel: each micro-batch's
-    * row_number window and union-merge shuffle a batch-sized frame, and
-    * the right width tracks BATCH volume, not the session's scan width.
-    * Honest A/B at the graded SFs (widths 32 vs 4, seven merge queries at
-    * sf0.1, two runs each): within noise — these merges are
-    * write/commit-floor-dominated, not shuffle-orchestration-dominated
-    * (unlike the state-store drains, where per-instance setup × width was
-    * 6 of 8 s). The scope still exists because the knob is the deployment
-    * lever at 100 TB/day (sized UP with batch volume) and because merge
-    * width pins the VERSION FILE COUNT: width 4 writes 4-file snapshots,
-    * keeping the table's file census independent of the batch session's
-    * width (the a12 small-files rationale at the source). Results are
-    * width-independent — LWW is a per-key argmax. Synchronized on the
-    * session, restored on exit (the single-sequential-driver contract all
-    * the width scopes share). */
-  def withMergeWidth[T](spark: SparkSession)(body: => T): T =
-    spark.synchronized {
-      Drain.withConfs(spark, Drain.mergeConfs)(body)
     }
 
   /** One LWW merge-and-publish step of the versioned upsert table — THE
@@ -668,10 +648,9 @@ object StreamingOps {
     // the anti join makes redelivery feed an empty new-vertex set while
     // the re-applied edges contract to no-ops
     val bNew = bIds.join(lab.select("id"), Seq("id"), "left_anti")
-    // no withFixpointWidth here: this runs on the STREAMING thread while
-    // the graded query's withMergeWidth holds the session monitor across
-    // the drain — taking it again would deadlock. The drain wrapper owns
-    // the width (delta-sized frames; the same knob rationale).
+    // no ConfScope here: this runs on the STREAMING thread while the
+    // drain's ConfScope.Merge holds the session monitor across the drain —
+    // taking it again would deadlock. The drain's scope owns the width.
     val upd = GraphOps.incrementalComponents(lab, bNew, e)
     upd.write.mode("overwrite").parquet(s"$root/labels/v${cur + 1}")
     writeVersionPointer(s, s"$root/labels", cur + 1)

@@ -1352,10 +1352,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("a stateful drain pins width 1 into its offset log and restores " +
       "the session's width") {
-    assume(!sys.env.contains("SPARK_GRAFT_DRAIN_WIDTH"))
     val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions")
     val ckpt = java.nio.file.Files.createTempDirectory("wpin").toString
-    Drain(spark, Drain.StateWidth)(
+    Drain(spark, ConfScope.State)(
       Tables.tableStream(spark, sf, "events").groupBy("event_type").count()
         .writeStream.format("memory").queryName("wpin_sink")
         .outputMode("complete").option("checkpointLocation", ckpt))
