@@ -20,8 +20,7 @@ import org.apache.spark.sql.SparkSession
   * bodies already plan under it.
   *
   * Every scope's results are width- and AQE-independent by construction
-  * (order-free aggregates, per-key argmax), pinned by the oracle gate at
-  * two widths (tests run at 4, Verify/Bench at the scope's width).
+  * (order-free aggregates, per-key argmax).
   */
 object ConfScope {
   private val Width = "spark.sql.shuffle.partitions"
