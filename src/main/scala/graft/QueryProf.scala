@@ -17,12 +17,7 @@ object QueryProf {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("dd_components_incr"))
-    // ad-hoc conf overrides for A/B runs: QUERYPROF_CONF="k=v;k2=v2"
-    val spark = sys.env.get("QUERYPROF_CONF").map(_.split(";").toSeq)
-      .getOrElse(Seq.empty)
-      .foldLeft(SparkEntry.localSession("32")) { (acc, kv) =>
-        val Array(k, v) = kv.split("=", 2); acc.config(k, v)
-      }.getOrCreate()
+    val spark = SparkEntry.localSession("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     case class Job(id: Int, site: String, start: Long, var end: Long = -1)

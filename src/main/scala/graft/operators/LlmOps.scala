@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{ConfScope, Q}
 import graft.functions.ExactNum._
 import graft.sources.Tables._
+import graft.sources.VersionedTable
 
 /** LLM-training-data pipeline operators — SURVEY.md §2 group J plus the
   * text-analysis / multimodal surface the north star mandates: exact and
@@ -280,10 +281,10 @@ object LlmOps {
   // now-hot shingle). The refresh below re-derives df counts + the stop
   // list over corpus ∪ landed increments FROM THE STORED ROWS (one
   // partial+final aggregate over ~40-byte index rows — never a text
-  // rescan) and republishes through the same versioned `_VERSION`-pointer
-  // layout the label table uses: immutable version dirs, atomic pointer
-  // move, crash-safe (a half-written version is unreachable), old
-  // versions prunable by Maintenance.vacuumVersions. Graded by
+  // rescan) and republishes through the same VersionedTable layout the
+  // label table uses: immutable version dirs, atomic pointer move,
+  // crash-safe (a half-written version is unreachable), old versions
+  // prunable by VersionedTable.vacuum. Graded by
   // dd_index_refresh: refreshed-artifact probe ≡ full-rebuild probe.
   // ------------------------------------------------------------------
 
@@ -300,8 +301,9 @@ object LlmOps {
     * Upgrade path: a root without the `_LAYOUT` marker is refused, so a
     * root written before the marker existed is unreadable by design (and
     * cannot be refreshed either: the publish reads it first). There is no
-    * migration; rebuild it from v0 with [[writeShingleArtifact]], which
-    * stamps the marker (BASELINE.md, "Stored-artifact upgrade path"). */
+    * migration; rebuild it on an empty root with [[writeShingleArtifact]],
+    * which stamps the marker there (BASELINE.md, "Stored-artifact upgrade
+    * path"). */
   private[graft] def storedShingleRows(s: org.apache.spark.sql.SparkSession,
       root: String, v: Long,
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
@@ -318,54 +320,40 @@ object LlmOps {
       s"shingle artifact at $root carries no _LAYOUT marker — refusing to " +
         "union version dirs that may be full-rewrite snapshots")
     // caller-supplied schema skips the per-read footer inference (the
-    // applyUpsertBatchStaged rule) — every version dir is this module's
+    // UpsertTable.applyBatch rule) — every version dir is this module's
     // own write of the same shingle-row shape
     val reader = schema.map(s.read.schema(_)).getOrElse(s.read)
-    reader.parquet((0L to v).map(i => s"$root/v$i/rows"): _*)
+    reader.parquet(
+      (0L to v).map(i => VersionedTable.dir(root, i) + "/rows"): _*)
   }
 
-  /** Stamp the delta-dir layout marker — written ONCE at v0, before any
-    * rows land, so a reader can never see an unmarked delta-dir root. */
-  private def writeShingleLayoutMarker(s: org.apache.spark.sql.SparkSession,
-      root: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(root, "_LAYOUT")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    try out.write("delta-dirs-v1\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Publish version `v` of the artifact: the increment's raw rows as
-    * the version's delta (`v0` = the whole base corpus) plus the df>maxDf
-    * stop list derived over the FULL stored rows ≤ v — one partial+final
-    * aggregate over ~40-byte index rows, never a text rescan. Both land
-    * inside the version dir before the pointer moves (the
-    * applyUpsertBatchStaged discipline: version and its artifacts commit
-    * atomically together). */
+  /** Publish the next version of the artifact and return its number:
+    * `deltaRows` as the version's delta (on an empty root they are the
+    * whole base corpus, v0) plus the df>maxDf stop list derived over the
+    * FULL stored rows ≤ it — one partial+final aggregate over ~40-byte
+    * index rows, never a text rescan, and no document re-shingled. Both
+    * land inside the version dir before the pointer moves
+    * ([[VersionedTable.publish]]), so a refresh is O(delta) written +
+    * O(stored index) aggregated. The delta-dir layout marker is stamped
+    * when there is no prior version, before any rows land, so a reader
+    * can never see an unmarked delta-dir root. */
   private[graft] def writeShingleArtifact(s: org.apache.spark.sql.SparkSession,
-      root: String, deltaRows: DataFrame, v: Long,
-      maxDf: Int = MaxShingleDf): Unit = {
-    if (v == 0L) writeShingleLayoutMarker(s, root)
-    deltaRows.write.mode("overwrite").parquet(s"$root/v$v/rows")
-    storedShingleRows(s, root, v, schema = Some(deltaRows.schema))
-      .groupBy("h").agg(count(lit(1)).as("df_"))
-      .filter(col("df_") > maxDf).select("h")
-      .write.mode("overwrite").parquet(s"$root/v$v/stop")
-    graft.streaming.StreamingOps.writeVersionPointer(s, root, v)
-  }
-
-  /** The refresh job: land an increment's shingle rows as the next
-    * version's delta, re-derive the stop list over base ∪ all landed
-    * increments, publish v+1. Cost is O(delta) written + O(stored index)
-    * aggregated — the stored rows already carry per-doc nsh, so no
-    * document is re-shingled. */
-  private[graft] def refreshShingleArtifact(s: org.apache.spark.sql.SparkSession,
-      root: String, incRows: DataFrame, maxDf: Int = MaxShingleDf): Long = {
-    val cur = graft.streaming.StreamingOps.readVersionPointer(s, root)
-      .getOrElse(sys.error(s"no published shingle artifact under $root"))
-    val next = cur + 1
-    writeShingleArtifact(s, root, incRows, next, maxDf)
-    next
-  }
+      root: String, deltaRows: DataFrame, maxDf: Int = MaxShingleDf): Long =
+    VersionedTable.publish(s, root) { (prev, dir) =>
+      if (prev.isEmpty) {
+        val marker = new org.apache.hadoop.fs.Path(root, "_LAYOUT")
+        val out = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+          .create(marker, true)
+        try out.write("delta-dirs-v1\n".getBytes("UTF-8")) finally out.close()
+      }
+      deltaRows.write.mode("overwrite").parquet(s"$dir/rows")
+      val v = VersionedTable.next(prev)
+      storedShingleRows(s, root, v, schema = Some(deltaRows.schema))
+        .groupBy("h").agg(count(lit(1)).as("df_"))
+        .filter(col("df_") > maxDf).select("h")
+        .write.mode("overwrite").parquet(s"$dir/stop")
+      v
+    }
 
   /** Read the CURRENT artifact version as a capped index frame — the
     * stored-index probe input (base ∪ delta rows ≤ pointer, minus the
@@ -373,10 +361,11 @@ object LlmOps {
     * shingleIndex capping shape). */
   private[graft] def readCappedShingleIndex(s: org.apache.spark.sql.SparkSession,
       root: String): DataFrame = {
-    val v = graft.streaming.StreamingOps.readVersionPointer(s, root)
+    val v = VersionedTable.current(s, root)
       .getOrElse(sys.error(s"no published shingle artifact under $root"))
-    storedShingleRows(s, root, v)
-      .join(broadcast(s.read.parquet(s"$root/v$v/stop")), Seq("h"), "left_anti")
+    storedShingleRows(s, root, v).join(
+      broadcast(s.read.parquet(VersionedTable.dir(root, v) + "/stop")),
+      Seq("h"), "left_anti")
   }
 
   /** Core of [[jaccardPairs]] over any documents-shaped frame (doc_id, lang,
@@ -1130,7 +1119,7 @@ object LlmOps {
     // stored rows — the full-rewrite form cost two ~0.85 s jobs per
     // refresh at sf0.1), re-derives df + the stop list over base ∪ delta
     // from the stored rows alone (one aggregate over index rows — no
-    // text rescan), and publishes v1 through the atomic `_VERSION`
+    // text rescan), and publishes v1 through the atomic version
     // pointer. The graded
     // frame is the stored-index probe an increment runs — τ=0.3 pairs
     // with ≥1 new endpoint, read from the REFRESHED artifact — and the
@@ -1151,8 +1140,8 @@ object LlmOps {
       // per-pass rebuild re-times the artifact writes + refresh + probe,
       // not a re-derivation of the corpus index (measured 3.4 → ~1.5 s)
       val all = graft.CacheRegistry.materialize(shingleRows(documents(s, d)))
-      writeShingleArtifact(s, root, all.filter(!isNewDoc(col("doc_id"))), 0L)
-      refreshShingleArtifact(s, root, all.filter(isNewDoc(col("doc_id"))))
+      writeShingleArtifact(s, root, all.filter(!isNewDoc(col("doc_id"))))
+      writeShingleArtifact(s, root, all.filter(isNewDoc(col("doc_id"))))
       jaccardFromIndex(readCappedShingleIndex(s, root), 0.3)
         .filter(isNewDoc(col("doc_a")) || isNewDoc(col("doc_b")))
         .select(col("doc_a").as("src"), col("doc_b").as("dst"),

@@ -14,10 +14,9 @@ import org.apache.spark.sql.SparkSession
   *
   * The rewrite goes to an explicit destination directory rather than
   * in-place: in-place compaction is only safe under a transaction log
-  * (a real table format's MERGE/OPTIMIZE, or the `_VERSION`-pointer
-  * pattern `graft.streaming.StreamingOps.runUpsertSinkToParquet` uses) —
-  * a caller that owns such a log swaps the pointer to `dest` after this
-  * returns, so readers never observe a half-written table.
+  * (a real table format's MERGE/OPTIMIZE, or the [[VersionedTable]]
+  * pointer) — a caller that owns such a log swaps the pointer to `dest`
+  * after this returns, so readers never observe a half-written table.
   *
   * File listing goes through the Hadoop FileSystem API (not java.io) so
   * the same code runs against HDFS/object stores on a cluster.
@@ -54,28 +53,5 @@ object Maintenance {
       .repartition(n)
       .write.mode("overwrite").parquet(dest)
     (before.length, parquetFiles(dest).length)
-  }
-
-  /** Retention pass for a `_VERSION`-pointer versioned table
-    * (`graft.streaming.StreamingOps.runUpsertSinkToParquet` targets):
-    * delete every published version older than the newest `keep` — the
-    * job that ends a version's time-travel readability (and reclaims the
-    * storage immutable snapshots otherwise accumulate forever). The
-    * CURRENT version is always within the kept window, so readers of the
-    * pointer are never affected; a concurrent time-travel reader of a
-    * pruned version sees a missing directory, the same contract a real
-    * table format's VACUUM has. Returns the pruned version numbers.
-    */
-  def vacuumVersions(spark: SparkSession, target: String, keep: Int): Seq[Long] = {
-    require(keep >= 1, "must keep at least the current version")
-    val dir = new Path(target)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .map(_.getPath.getName.stripPrefix("v").toLong)
-      .sorted
-    val prune = versions.dropRight(keep)
-    prune.foreach(v => fs.delete(new Path(dir, s"v$v"), true))
-    prune
   }
 }

@@ -161,8 +161,8 @@ object GraphOpsSpec extends Properties("graphops") {
           .minLabelComponents(oldIds.toDF("id"), df(oldEdges), rounds = None)
         val root = graft.sources.ScratchDirs
           .freshDirFor(spark, "/tmp/sg18prop", "sg18_prop")
-        stored.write.mode("overwrite").parquet(s"$root/labels/v0")
-        graft.streaming.StreamingOps.writeVersionPointer(spark, s"$root/labels", 0L)
+        graft.sources.VersionedTable.publish(spark, s"$root/labels")(
+          (_, v0) => stored.write.mode("overwrite").parquet(v0))
         (0 until nBatches).foreach { b =>
           val ids = (0 until nNew).filter(assign(_) == b).map(v => vid(v + nOld))
           val batch = (if (ids.isEmpty) Seq.empty[Long] else ids).toDF("doc_id")
@@ -170,9 +170,8 @@ object GraphOpsSpec extends Properties("graphops") {
             .applyComponentsBatch(spark, root, df(newEdges), batch,
               c => c % 5 === 0)
         }
-        val fin = graft.streaming.StreamingOps
-          .readVersionPointer(spark, s"$root/labels").get
-        val got = spark.read.parquet(s"$root/labels/v$fin").collect()
+        val got = graft.sources.VersionedTable
+          .readCurrent(spark, s"$root/labels").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toMap
         // union-find over ALL vertices and edges, on the real id space
         val allIds = (oldIds ++ (0 until nNew).map(v => vid(v + nOld))).distinct

@@ -597,12 +597,13 @@ class LlmOpsSpec extends AnyFunSuite {
       .freshDirFor(spark, "/tmp/idx_refresh_spec", "cap_cross")
     val oldRows = LlmOps.shingleRows(docs.filter(!isNew(col("doc_id"))))
     val incRows = LlmOps.shingleRows(docs.filter(isNew(col("doc_id"))))
-    LlmOps.writeShingleArtifact(spark, root, oldRows, 0L, maxDf = cap)
+    assert(LlmOps.writeShingleArtifact(spark, root, oldRows, maxDf = cap) == 0L)
     // STALE probe: the increment's rows checked against v0's stop list —
     // "a b c" is not hot there, so the phantom pairs appear
     val stale = probePairs(
       oldRows.unionByName(incRows)
-        .join(broadcast(spark.read.parquet(s"$root/v0/stop")),
+        .join(broadcast(spark.read.parquet(
+          graft.sources.VersionedTable.dir(root, 0L) + "/stop")),
           Seq("h"), "left_anti"))
     assert(stale == Set((1L, 5L), (2L, 5L), (3L, 10L)))
     // full rebuild over old ∪ increment: the cap drops "a b c"
@@ -613,12 +614,12 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(rebuild == Set((3L, 10L)))
     // REFRESH republishes df + stop over the union; the refreshed-artifact
     // probe now equals the rebuild, and the pointer moved atomically
-    val v1 = LlmOps.refreshShingleArtifact(spark, root, incRows, maxDf = cap)
+    val v1 = LlmOps.writeShingleArtifact(spark, root, incRows, maxDf = cap)
     assert(v1 == 1L)
-    assert(graft.streaming.StreamingOps
-      .readVersionPointer(spark, root).contains(1L))
+    assert(graft.sources.VersionedTable.current(spark, root).contains(1L))
     assert(probePairs(LlmOps.readCappedShingleIndex(spark, root)) == rebuild)
     // v0 stays readable (immutable versions) until a vacuum prunes it
-    assert(spark.read.parquet(s"$root/v0/rows").count() == oldRows.count())
+    assert(spark.read.parquet(graft.sources.VersionedTable.dir(root, 0L) + "/rows")
+      .count() == oldRows.count())
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.graftexpr.SessionArtifacts
 
-import graft.sources.Tables
+import graft.sources.{Tables, UpsertTable, VersionedTable}
 import graft.streaming.{Drain, StreamingOps}
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
@@ -508,7 +508,7 @@ class StreamingSpec extends AnyFunSuite {
         mem.toDS().select("user_id", "event_id", "event_type", "ts"),
         ck, target)
     }
-    val got = StreamingOps.currentUpsertTable(spark, target)
+    val got = VersionedTable.readCurrent(spark, target)
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_type"), col("us").as("last_us"))
       .orderBy("user_id").collect().toSeq
@@ -523,18 +523,18 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-    val v0 = StreamingOps.upsertTableAt(spark, target, 0L)
+    val v0 = VersionedTable.read(spark, target, 0L)
     assert(v0.exceptAll(firstLww).count() == 0 &&
       firstLww.exceptAll(v0).count() == 0)
     // retention: vacuum to the newest version only — v0's time travel ends
     // (directory gone), the pointer's current snapshot is untouched
-    val pruned = graft.sources.Maintenance.vacuumVersions(spark, target, keep = 1)
+    val pruned = VersionedTable.vacuum(spark, target, keep = 1)
     assert(pruned.contains(0L))
-    assert(StreamingOps.currentUpsertTable(spark, target)
+    assert(VersionedTable.readCurrent(spark, target)
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_type"), col("us").as("last_us"))
       .orderBy("user_id").collect().toSeq == want)
-    intercept[Exception] { StreamingOps.upsertTableAt(spark, target, 0L).collect() }
+    intercept[Exception] { VersionedTable.read(spark, target, 0L).collect() }
   }
 
   test("upsert change feed: insert for new keys, update for changed winners, " +
@@ -553,8 +553,8 @@ class StreamingSpec extends AnyFunSuite {
       // user 3: first appearance → insert
       Ev(13, t("2024-01-02 10:00:00"), 3, "view", 1.0, "{}"))
     Seq(b0, b1).foreach(ch =>
-      StreamingOps.applyUpsertBatch(spark, ch.toDF(), target))
-    val feed = StreamingOps.upsertChangeFeed(spark, target, 0L, 1L)
+      UpsertTable.applyBatch(spark, ch.toDF(), target))
+    val feed = UpsertTable.changeFeed(spark, target, 0L, 1L)
       .orderBy("user_id").collect()
     assert(feed.map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((1L, "update"), (3L, "insert")), feed.mkString("; "))
@@ -575,8 +575,8 @@ class StreamingSpec extends AnyFunSuite {
       StreamingOps.runUpsertSinkToParquet(spark, mem.toDS(), ck, target2)
     }
     (0L to 1L).foreach { v =>
-      val a = StreamingOps.upsertTableAt(spark, target, v)
-      val b = StreamingOps.upsertTableAt(spark, target2, v)
+      val a = VersionedTable.read(spark, target, v)
+      val b = VersionedTable.read(spark, target2, v)
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         s"stream/batch kernel drift at v$v")
     }
@@ -602,18 +602,18 @@ class StreamingSpec extends AnyFunSuite {
       // the tombstone, this older row would silently resurrect the user
       Ev(10, t("2024-01-01 10:00:00"), 1, "view", 1.0, "{}"))
     Seq(b0, b1, b2).foreach(b =>
-      StreamingOps.applyUpsertBatch(spark, withOp(b), target))
-    val visible = StreamingOps.visibleMergeTable(spark, target)
+      UpsertTable.applyBatch(spark, withOp(b), target))
+    val visible = UpsertTable.visible(spark, target)
       .select("user_id").collect().map(_.getLong(0)).toSet
     assert(visible == Set(2L), s"tombstone lost to a redelivered older row: $visible")
     // v0→v1 feed: user 1 visible→tombstoned = delete; user 2
     // tombstoned→visible = insert (the resurrect IS an insert: the
     // consumer's copy had no such key)
-    val feed01 = StreamingOps.mergeChangeFeed(spark, target, 0L, 1L)
+    val feed01 = UpsertTable.mergeChangeFeed(spark, target, 0L, 1L)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(feed01 == Set((1L, "delete"), (2L, "insert")), feed01.toString)
     // v1→v2: the redelivery changed NO visible state — empty feed
-    assert(StreamingOps.mergeChangeFeed(spark, target, 1L, 2L).isEmpty)
+    assert(UpsertTable.mergeChangeFeed(spark, target, 1L, 2L).isEmpty)
   }
 
   test("cdc ivm: summed change-feed deltas telescope to the final snapshot " +
@@ -628,13 +628,13 @@ class StreamingSpec extends AnyFunSuite {
       val target = java.nio.file.Files.createTempDirectory("ivm_tbl").toString
       val deltas = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
       batches.zipWithIndex.foreach { case (b, _) =>
-        StreamingOps.applyUpsertBatch(spark, b, s"$target/t")
-        val cur = StreamingOps.readVersionPointer(spark, s"$target/t").get
+        UpsertTable.applyBatch(spark, b, s"$target/t")
+        val cur = VersionedTable.current(spark, s"$target/t").get
         val feed =
-          if (cur == 0L) StreamingOps.upsertTableAt(spark, s"$target/t", 0L)
+          if (cur == 0L) VersionedTable.read(spark, s"$target/t", 0L)
             .select(lit(null).cast("string").as("old_type"),
               col("event_type").as("new_type"))
-          else StreamingOps.upsertChangeFeed(spark, s"$target/t", cur - 1, cur)
+          else UpsertTable.changeFeed(spark, s"$target/t", cur - 1, cur)
             .select(col("old_type"), col("new_type"))
         feed.collect().foreach { r =>
           if (!r.isNullAt(0)) deltas(r.getString(0)) -= 1
@@ -667,44 +667,45 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
     val (b1, b2) = (ev.filter(col("user_id") % 2 === 0),
       ev.filter(col("user_id") % 2 === 1))
-    def stageFeed(verDir: String, cur: Long): Unit = {
-      val feed =
-        if (cur == 0L) spark.read.parquet(verDir)
+    def stageFeed(prev: Option[Long], verDir: String): Unit = {
+      val feed = prev match {
+        case None => spark.read.parquet(verDir)
           .select(lit(null).cast("string").as("old_type"),
             col("event_type").as("new_type"))
-        else StreamingOps.upsertChangeFeed(spark, target, cur - 1, cur)
+        case Some(p) => UpsertTable.changeFeed(spark, target, p, p + 1)
           .select(col("old_type"), col("new_type"))
+      }
       feed.write.mode("overwrite").parquet(s"$verDir/_feed")
     }
-    StreamingOps.applyUpsertBatchStaged(spark, b1, target)(stageFeed)
-    assert(StreamingOps.readVersionPointer(spark, target).contains(0L))
+    UpsertTable.applyBatch(spark, b1, target, stageFeed)
+    assert(VersionedTable.current(spark, target).contains(0L))
     // batch 2 CRASHES after the snapshot write AND the feed stage but
     // before the pointer publish — exactly the old publish-vs-feed window
     val boom = intercept[RuntimeException] {
-      StreamingOps.applyUpsertBatchStaged(spark, b2, target) { (verDir, cur) =>
-        stageFeed(verDir, cur)
+      UpsertTable.applyBatch(spark, b2, target, { (prev, verDir) =>
+        stageFeed(prev, verDir)
         throw new RuntimeException("kill -9 between stage and publish")
-      }
+      })
     }
     assert(boom.getMessage.contains("kill -9"))
     // the crash is invisible to readers: pointer still v0, current snapshot
     // is batch 1's, and the PUBLISHED feed union excludes the orphan v1
-    assert(StreamingOps.readVersionPointer(spark, target).contains(0L))
-    assert(StreamingOps.currentUpsertTable(spark, target)
+    assert(VersionedTable.current(spark, target).contains(0L))
+    assert(VersionedTable.readCurrent(spark, target)
       .select("user_id").distinct().collect()
       .forall(_.getLong(0) % 2 == 0))
     // the snapshot read of the orphaned v1 dir also never sees the staged
     // feed rows (the `_` prefix hides them from parquet directory reads)
-    assert(StreamingOps.upsertTableAt(spark, target, 1L).columns.toSet ==
-      StreamingOps.upsertTableAt(spark, target, 0L).columns.toSet)
+    assert(VersionedTable.read(spark, target, 1L).columns.toSet ==
+      VersionedTable.read(spark, target, 0L).columns.toSet)
     // REPLAY batch 2 (at-least-once): overwrites orphan snapshot+feed,
     // publishes v1; the feed union through the pointer now telescopes to
     // the full-table truth
-    StreamingOps.applyUpsertBatchStaged(spark, b2, target)(stageFeed)
-    assert(StreamingOps.readVersionPointer(spark, target).contains(1L))
-    val cur = StreamingOps.readVersionPointer(spark, target).get
+    UpsertTable.applyBatch(spark, b2, target, stageFeed)
+    assert(VersionedTable.current(spark, target).contains(1L))
+    val cur = VersionedTable.current(spark, target).get
     val summed = spark.read
-      .parquet((0L to cur).map(v => s"$target/v$v/_feed"): _*)
+      .parquet((0L to cur).map(v => VersionedTable.dir(target, v) + "/_feed"): _*)
       .select(org.apache.spark.sql.functions.explode(
         org.apache.spark.sql.functions.array(
           org.apache.spark.sql.functions.struct(col("new_type").as("etype"), lit(1L).as("delta")),
@@ -1220,13 +1221,12 @@ class StreamingSpec extends AnyFunSuite {
         : Map[Long, Long] = {
       val root = graft.sources.ScratchDirs
         .freshDirFor(spark, "/tmp/sg18synth", s"sg18_$tag")
-      stored.write.mode("overwrite").parquet(s"$root/labels/v0")
-      StreamingOps.writeVersionPointer(spark, s"$root/labels", 0L)
+      VersionedTable.publish(spark, s"$root/labels")(
+        (_, v0) => stored.write.mode("overwrite").parquet(v0))
       batches.foreach(b =>
         StreamingOps.applyComponentsBatch(spark, root, newPairs, b,
           c => c % 5 === 0))
-      val fin = StreamingOps.readVersionPointer(spark, s"$root/labels").get
-      val rows = spark.read.parquet(s"$root/labels/v$fin").collect()
+      val rows = VersionedTable.readCurrent(spark, s"$root/labels").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       assert(rows.length == rows.map(_._1).distinct.length,
         s"duplicate label rows after $tag")
@@ -1246,26 +1246,37 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val root = graft.sources.ScratchDirs
       .freshDirFor(spark, "/tmp/sg18vac", "sg18_vacuum")
-    Seq((1L, 1L), (2L, 1L)).toDF("id", "comp")
-      .write.mode("overwrite").parquet(s"$root/labels/v0")
-    StreamingOps.writeVersionPointer(spark, s"$root/labels", 0L)
+    VersionedTable.publish(spark, s"$root/labels")((_, v0) =>
+      Seq((1L, 1L), (2L, 1L)).toDF("id", "comp")
+        .write.mode("overwrite").parquet(v0))
     val newPairs = Seq((1L, 5L), (2L, 10L)).toDF("src", "dst")
     Seq(Seq(5L), Seq(10L)).foreach(ids =>
       StreamingOps.applyComponentsBatch(spark, root, newPairs,
         ids.toDF("doc_id"), c => c % 5 === 0))
     // three versions landed (v0..v2); keep = 2 prunes exactly v0
-    val pruned = graft.sources.Maintenance
-      .vacuumVersions(spark, s"$root/labels", keep = 2)
+    val pruned = VersionedTable.vacuum(spark, s"$root/labels", keep = 2)
     assert(pruned == Seq(0L))
-    assert(StreamingOps.readVersionPointer(spark, s"$root/labels").contains(2L))
+    assert(VersionedTable.current(spark, s"$root/labels").contains(2L))
     // published version intact and correct; the rollback version readable
-    val fin = spark.read.parquet(s"$root/labels/v2").collect()
+    val fin = VersionedTable.read(spark, s"$root/labels", 2L).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(fin == Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 10L -> 1L))
-    assert(spark.read.parquet(s"$root/labels/v1").count() == 3)
+    assert(VersionedTable.read(spark, s"$root/labels", 1L).count() == 3)
     // the pruned version is gone
     assertThrows[org.apache.spark.sql.AnalysisException] {
-      spark.read.parquet(s"$root/labels/v0").collect()
+      VersionedTable.read(spark, s"$root/labels", 0L).collect()
+    }
+  }
+
+  test("the components and IVF maintenance drains stream their spool with " +
+      "the feed frame's schema, equal to the schema the spool reads back") {
+    import graft.streaming.StreamingGraded.{compIncrFeed, ivfMaintainFeed}
+    for ((name, feed) <- Seq("compIncrFeed" -> compIncrFeed(spark, sf),
+        "ivfMaintainFeed" -> ivfMaintainFeed(spark, sf))) {
+      val spool = java.nio.file.Files.createTempDirectory("feed_spool").toString
+      feed.write.mode("overwrite").parquet(spool)
+      val streamed = spark.readStream.schema(feed.schema).parquet(spool).schema
+      assert(streamed == spark.read.parquet(spool).schema, name)
     }
   }
 
@@ -1291,11 +1302,11 @@ class StreamingSpec extends AnyFunSuite {
         : (Long, Map[Long, (Int, Int)]) = {
       val root = graft.sources.ScratchDirs
         .freshDirFor(spark, "/tmp/sg20synth", s"sg20_$tag")
-      oldRows.write.mode("overwrite").parquet(s"$root/index/v0")
-      StreamingOps.writeVersionPointer(spark, s"$root/index", 0L)
+      VersionedTable.publish(spark, s"$root/index")(
+        (_, v0) => oldRows.write.mode("overwrite").parquet(v0))
       batches.foreach(b => StreamingOps.maintainIvfBatch(spark, root, cents, b))
-      val fin = StreamingOps.readVersionPointer(spark, s"$root/index").get
-      val rows = spark.read.parquet(s"$root/index/v$fin").collect()
+      val fin = VersionedTable.current(spark, s"$root/index").get
+      val rows = VersionedTable.read(spark, s"$root/index", fin).collect()
         .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2))))
       assert(rows.length == rows.map(_._1).distinct.length,
         s"duplicate index rows after $tag")
