@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -7,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.Q
 import graft.functions.ExactNum._
 import graft.sources.Tables._
+import graft.sources.UpsertTable.lastWriterWins
 
 /** Scalar function families and the incremental-sync loop — SURVEY.md §2
   * groups H (string/date/math/array/map/JSON) and I (the CMDB sync
@@ -26,6 +28,21 @@ import graft.sources.Tables._
   * the blow-up factor (4×) is fixed and bounded.
   */
 object TemporalOps {
+
+  /** I11's sync cutoff: the sync polls the events past it, and the
+    * pre-sync target is the state at or before it. */
+  private[graft] val SyncCutoff = lit("2024-01-15 00:00:00").cast("timestamp")
+
+  /** The pre-sync target that i11 and its streaming twin i11b classify
+    * against: per user, the last writer at or before [[SyncCutoff]], as
+    * (user_id, old_type). */
+  private[graft] def syncTarget(s: SparkSession, d: String): DataFrame =
+    lastWriterWins(syncEvents(events(s, d).filter(col("ts") <= SyncCutoff)))
+      .select(col("user_id"), col("event_type").as("old_type"))
+
+  private def syncEvents(ev: DataFrame): DataFrame =
+    ev.select(col("user_id"), col("event_id"), col("event_type"),
+      unix_micros(col("ts")).as("us"))
 
   val queries: Map[String, Q] = Map(
     // ------------------------------------------------------------------- H
@@ -197,17 +214,9 @@ object TemporalOps {
       val cutoff = lit("2024-01-15 00:00:00").cast("timestamp")
       val ev = events(s, d).select(col("user_id"), col("event_id"),
         col("event_type"), unix_micros(col("ts")).as("us"), col("ts"))
-      val targetW = Window.partitionBy("user_id")
-        .orderBy(col("us").desc, col("event_id").desc)
-      val target = ev.filter(col("ts") <= cutoff)
-        .withColumn("rn", row_number().over(targetW))
-        .filter(col("rn") === 1).drop("rn", "ts")
+      val target = lastWriterWins(ev.filter(col("ts") <= cutoff)).drop("ts")
       val delta = ev.filter(col("ts") > cutoff).drop("ts")
-      val lwwW = Window.partitionBy("user_id")
-        .orderBy(col("us").desc, col("event_id").desc)
-      target.unionByName(delta)
-        .withColumn("rn", row_number().over(lwwW))
-        .filter(col("rn") === 1).drop("rn")
+      lastWriterWins(target.unionByName(delta))
         .select(col("user_id"), col("event_id").as("last_event_id"),
           col("event_type").as("last_type"), col("us").as("last_us"))
         .orderBy("user_id")
@@ -270,18 +279,11 @@ object TemporalOps {
     // — the target table is touched only for the keys the delta names,
     // which is what keeps a 100 TB target affordable to sync against.
     "i11_sync_pipeline" -> ((s, d) => {
-      val wm = lit("2024-01-15 00:00:00").cast("timestamp")
-      val ev = events(s, d).select(col("user_id"), col("event_id"),
-        col("event_type"), unix_micros(col("ts")).as("us"), col("ts"))
-      val lww = Window.partitionBy("user_id")
-        .orderBy(col("us").desc, col("event_id").desc)
-      val target = ev.filter(col("ts") <= wm)
-        .withColumn("rn", row_number().over(lww)).filter(col("rn") === 1)
-        .select(col("user_id").as("tu"), col("event_type").as("old_type"))
-      val delta = ev.filter(col("ts") > wm)
+      val target = syncTarget(s, d)
+        .select(col("user_id").as("tu"), col("old_type"))
+      val delta = syncEvents(events(s, d).filter(col("ts") > SyncCutoff))
       val deltaVol = delta.groupBy("user_id").agg(count(lit(1)).as("n_delta"))
-      val deltaLww = delta
-        .withColumn("rn", row_number().over(lww)).filter(col("rn") === 1)
+      val deltaLww = lastWriterWins(delta)
         .select(col("user_id"), col("event_type").as("new_type"))
       deltaLww.join(deltaVol, Seq("user_id"))
         .join(target, col("user_id") === col("tu"), "left")
@@ -312,14 +314,10 @@ object TemporalOps {
     // projection.
     "i13_precedence_merge" -> ((s, d) => {
       val staleUs = 604800000000L // 7 days
-      def lww(types: Seq[String]) = {
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("us").desc, col("event_id").desc)
-        events(s, d).filter(col("event_type").isin(types: _*))
+      def lww(types: Seq[String]) =
+        lastWriterWins(events(s, d).filter(col("event_type").isin(types: _*))
           .select(col("user_id"), col("event_id"), col("event_type"),
-            cents(col("value")).as("vc"), unix_micros(col("ts")).as("us"))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      }
+            cents(col("value")).as("vc"), unix_micros(col("ts")).as("us")))
       val a = lww(Seq("signup", "purchase"))
         .select(col("user_id"), col("event_type").as("a_type"),
           col("vc").as("a_vc"), col("us").as("a_us"))
@@ -396,17 +394,12 @@ object TemporalOps {
     // I8: snapshot diff (CDC derive) — per-user state at t1 vs t2; emits
     // inserted/updated/unchanged rows (the sync delta the reference loads).
     "i8_snapshot_diff" -> ((s, d) => {
-      def stateAt(cut: String) = {
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("us").desc, col("event_id").desc)
-        events(s, d)
+      def stateAt(cut: String) =
+        lastWriterWins(events(s, d)
           .filter(col("ts") <= lit(cut).cast("timestamp"))
           .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"),
-            col("event_id"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
+            col("event_id")))
           .select(col("user_id"), col("event_type"))
-      }
       val old = stateAt("2024-01-10 00:00:00")
         .select(col("user_id").as("ku"), col("event_type").as("old_type"))
       val neu = stateAt("2024-01-20 00:00:00")

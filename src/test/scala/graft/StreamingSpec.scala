@@ -335,14 +335,14 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val q = StreamingOps.tumblingWithWatermark(mem.toDF(), "10 minutes")
+    val q = StreamingOps.tumblingCounts(mem.toDF())
       .writeStream.outputMode("append").format("memory").queryName("wm").start()
-    // batch 1 establishes event-time frontier at 12:40 → watermark 12:30
+    // batch 1 establishes event-time frontier at 12:40 → watermark 11:40
     mem.addData(evs: _*)
     q.processAllAvailable()
     // batch 2: a very late event at 09:01 — its window [09:00,10:00) closed
     // long before the watermark, so it must not resurrect state; and in
-    // append mode the closed windows [10:00..12:00) are already emitted.
+    // append mode the closed window [10:00, 11:00) is already emitted.
     mem.addData(Ev(99, t("2024-01-01 09:01:00"), 9, "click", 1.0, "{}"))
     q.processAllAvailable(); q.stop()
     val out = spark.table("wm")
@@ -1270,14 +1270,44 @@ class StreamingSpec extends AnyFunSuite {
 
   test("the components and IVF maintenance drains stream their spool with " +
       "the feed frame's schema, equal to the schema the spool reads back") {
-    import graft.streaming.StreamingGraded.{compIncrFeed, ivfMaintainFeed}
-    for ((name, feed) <- Seq("compIncrFeed" -> compIncrFeed(spark, sf),
-        "ivfMaintainFeed" -> ivfMaintainFeed(spark, sf))) {
-      val spool = java.nio.file.Files.createTempDirectory("feed_spool").toString
-      feed.write.mode("overwrite").parquet(spool)
-      val streamed = spark.readStream.schema(feed.schema).parquet(spool).schema
+    // all five spooled drains: each streams its feed through spooledStream
+    import graft.streaming.StreamingGraded.{bpeEncodeFeed, compIncrFeed,
+      ivfMaintainFeed, spooledStream, upsertFeed}
+    for ((name, feed) <- Seq(
+        "a13_vacuum_roundtrip" -> upsertFeed(spark, sf),
+        "cdc_ivm_stream" -> upsertFeed(spark, sf),
+        "dd_components_incr_stream" -> compIncrFeed(spark, sf),
+        "ta_bpe_encode_stream" -> bpeEncodeFeed(spark, sf),
+        "lsh_ivf_maintain_stream" -> ivfMaintainFeed(spark, sf))) {
+      val tag = s"spec_spool_$name"
+      val streamed = spooledStream(spark, sf, tag, feed, 1).schema
+      val spool = graft.sources.ScratchDirs.dirFor(sf, tag)
       assert(streamed == spark.read.parquet(spool).schema, name)
     }
+    // and no drain declares a spooled stream of its own
+    val src = scala.io.Source.fromFile(
+      "src/main/scala/graft/streaming/StreamingGraded.scala", "UTF-8")
+    val text = try src.mkString finally src.close()
+    assert("""\.readStream\b""".r.findAllIn(text).size == 1)
+  }
+
+  test("graded drains build their stream plans with the StreamingOps " +
+      "kernels: no watermark or window call in StreamingGraded.scala") {
+    // an inline watermark or window in a graded drain is a second copy of
+    // a kernel the specs above prove against its batch twin
+    val inline = """\b(withWatermark|window|session_window)\(""".r
+    def lines(f: String) = {
+      val src = scala.io.Source.fromFile(s"src/main/scala/graft/streaming/$f", "UTF-8")
+      try src.getLines().toList finally src.close()
+    }
+    // the pattern must see the kernels' own calls, or it scans for nothing
+    val own = inline.findAllMatchIn(lines("StreamingOps.scala").mkString("\n"))
+      .map(_.group(1)).toSet
+    assert(own == Set("withWatermark", "window", "session_window"), own)
+    val hits = lines("StreamingGraded.scala").zipWithIndex.collect {
+      case (l, i) if inline.findFirstIn(l).isDefined => s"${i + 1}: ${l.trim}"
+    }
+    assert(hits.isEmpty, s"inline stream plan in StreamingGraded: $hits")
   }
 
   test("SG20 batch kernel: IVF maintenance assigns against the fixed grid, " +
