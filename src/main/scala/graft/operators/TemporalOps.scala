@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,14 +30,15 @@ import graft.sources.UpsertTable.lastWriterWins
 object TemporalOps {
 
   /** I11's sync cutoff: the sync polls the events past it, and the
-    * pre-sync target is the state at or before it. */
-  private[graft] val SyncCutoff = lit("2024-01-15 00:00:00").cast("timestamp")
+    * pre-sync target is the state at or before it. A `def`, so loading
+    * the registry builds no Column. */
+  private[graft] def syncCutoff: Column = lit("2024-01-15 00:00:00").cast("timestamp")
 
   /** The pre-sync target that i11 and its streaming twin i11b classify
-    * against: per user, the last writer at or before [[SyncCutoff]], as
+    * against: per user, the last writer at or before [[syncCutoff]], as
     * (user_id, old_type). */
   private[graft] def syncTarget(s: SparkSession, d: String): DataFrame =
-    lastWriterWins(syncEvents(events(s, d).filter(col("ts") <= SyncCutoff)))
+    lastWriterWins(syncEvents(events(s, d).filter(col("ts") <= syncCutoff)))
       .select(col("user_id"), col("event_type").as("old_type"))
 
   private def syncEvents(ev: DataFrame): DataFrame =
@@ -281,7 +282,7 @@ object TemporalOps {
     "i11_sync_pipeline" -> ((s, d) => {
       val target = syncTarget(s, d)
         .select(col("user_id").as("tu"), col("old_type"))
-      val delta = syncEvents(events(s, d).filter(col("ts") > SyncCutoff))
+      val delta = syncEvents(events(s, d).filter(col("ts") > syncCutoff))
       val deltaVol = delta.groupBy("user_id").agg(count(lit(1)).as("n_delta"))
       val deltaLww = lastWriterWins(delta)
         .select(col("user_id"), col("event_type").as("new_type"))

@@ -195,8 +195,8 @@ object StreamingGraded {
     // so the final row is argmax(n_delta) — one row_number window over
     // the user-sized sink table.
     "i11b_sync_stream" -> ((s, d) => {
-      import graft.operators.TemporalOps.{SyncCutoff, syncTarget}
-      val delta = Tables.tableStream(s, d, "events").filter(col("ts") > SyncCutoff)
+      import graft.operators.TemporalOps.{syncCutoff, syncTarget}
+      val delta = Tables.tableStream(s, d, "events").filter(col("ts") > syncCutoff)
       val changes = StreamingOps.syncChanges(delta, syncTarget(s, d))
       val last = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n_delta").desc)
