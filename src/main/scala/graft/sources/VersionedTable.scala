@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -63,25 +63,28 @@ object VersionedTable {
     * version: a crash before the pointer move loses both, and the replay
     * overwrites both — so `write` must write with mode "overwrite".
     *
-    * The pointer move writes `_VERSION.tmp` and renames it onto
-    * `_VERSION` with `FileContext.rename(OVERWRITE)`, the primitive
-    * Spark's own checkpoint file manager commits with. It is atomic on
-    * HDFS and local filesystems; on object stores without atomic rename
-    * (e.g. S3A) the rename is copy+delete, a small torn-pointer window —
-    * front the pointer with a rename-capable store there, the caveat
-    * every pointer-file table layout carries. */
+    * The pointer move is an atomic write of `_VERSION` through
+    * [[CheckpointFiles]], the manager every drain checkpoints with: a
+    * temp file renamed onto the pointer. On HDFS and object stores that
+    * is `FileContext.rename(OVERWRITE)`; on a local file system it is
+    * `FileSystem.rename`, because without libhadoop the FileContext
+    * rename forked a `readlink` per link check and the create a `chmod`
+    * (about 384 and 90 forks per `--full` stream_drains benchmark run).
+    * It is atomic on HDFS and local filesystems; on object stores without
+    * atomic rename (e.g. S3A) the rename is copy+delete, a small
+    * torn-pointer window — front the pointer with a rename-capable store
+    * there, the caveat every pointer-file table layout carries. */
   def publish[T](s: SparkSession, root: String)(
       write: (Option[Long], String) => T): T = {
     val prev = current(s, root)
     val v = next(prev)
     val out = write(prev, dir(root, v))
     val rootPath = new Path(root)
-    val conf = s.sparkContext.hadoopConfiguration
-    val tmp = new Path(rootPath, "_VERSION.tmp")
-    val os = rootPath.getFileSystem(conf).create(tmp, true)
-    try os.write(s"v$v".getBytes("UTF-8")) finally os.close()
-    FileContext.getFileContext(rootPath.toUri, conf)
-      .rename(tmp, new Path(rootPath, "_VERSION"), Options.Rename.OVERWRITE)
+    val os = new CheckpointFiles(rootPath, s.sparkContext.hadoopConfiguration)
+      .createAtomic(new Path(rootPath, "_VERSION"), overwriteIfPossible = true)
+    try os.write(s"v$v".getBytes("UTF-8"))
+    catch { case e: Throwable => os.cancel(); throw e }
+    os.close()
     out
   }
 

@@ -832,24 +832,33 @@ class StreamingSpec extends AnyFunSuite {
     // re-read committed files, (b) the aggregation state must carry. The
     // proof is the count total: a lost checkpoint double-counts batch 1
     // (replay + whatever state survived), a lost state store undercounts
-    // it; exactly n1+n2 means exactly-once end to end.
+    // it; exactly n1+n2 means exactly-once end to end. The checkpoint
+    // manager is an input: Spark's default (a bare writeStream) and
+    // graft.sources.CheckpointFiles (both runs through Drain).
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("resume_in").toString
-    val ck = java.nio.file.Files.createTempDirectory("resume_ck").toString
     val (first, second) = evs.splitAt(4)
-    first.toDF().write.mode("append").parquet(in)
-    def start() = StreamingOps.tumblingCounts(
-        spark.readStream.schema(first.toDF().schema).parquet(in))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("resume").option("checkpointLocation", ck).start()
-    val q1 = start(); q1.processAllAvailable(); q1.stop()
-    val n1 = spark.table("resume").agg(sum("n")).head().getLong(0)
-    assert(n1 == first.size)
-    second.toDF().write.mode("append").parquet(in)
-    val q2 = start(); q2.processAllAvailable(); q2.stop()
-    val total = spark.table("resume").agg(sum("n")).head().getLong(0)
-    assert(total == evs.size,
-      s"restart broke exactly-once: $total events counted for ${evs.size}")
+    for (viaDrain <- Seq(false, true)) {
+      val manager = if (viaDrain) "CheckpointFiles" else "Spark's default"
+      val in = java.nio.file.Files.createTempDirectory("resume_in").toString
+      val ck = java.nio.file.Files.createTempDirectory("resume_ck").toString
+      first.toDF().write.mode("append").parquet(in)
+      def run(): Unit = {
+        val writer = StreamingOps.tumblingCounts(
+            spark.readStream.schema(first.toDF().schema).parquet(in))
+          .writeStream.outputMode("complete").format("memory")
+          .queryName("resume").option("checkpointLocation", ck)
+        if (viaDrain) Drain(spark)(writer)
+        else { val q = writer.start(); q.processAllAvailable(); q.stop() }
+      }
+      run()
+      val n1 = spark.table("resume").agg(sum("n")).head().getLong(0)
+      assert(n1 == first.size, manager)
+      second.toDF().write.mode("append").parquet(in)
+      run()
+      val total = spark.table("resume").agg(sum("n")).head().getLong(0)
+      assert(total == evs.size, s"$manager: restart broke exactly-once: " +
+        s"$total events counted for ${evs.size}")
+    }
   }
 
   test("retention IVM: retraction state survives a checkpoint restart") {
@@ -1394,6 +1403,8 @@ class StreamingSpec extends AnyFunSuite {
   test("a stateful drain pins width 1 into its offset log and restores " +
       "the session's width") {
     val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+    val sessionManager = spark.conf.getOption(managerKey)
     val ckpt = java.nio.file.Files.createTempDirectory("wpin").toString
     Drain(spark, ConfScope.State)(
       Tables.tableStream(spark, sf, "events").groupBy("event_type").count()
@@ -1404,6 +1415,7 @@ class StreamingSpec extends AnyFunSuite {
       .findFirstMatchIn(log).map(_.group(1).toInt)
     assert(pinned.contains(1), s"offset log pinned $pinned")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == sessionWidth)
+    assert(spark.conf.getOption(managerKey) == sessionManager)
   }
 
   test("a second tableStream on the same path starts no Spark job") {
