@@ -34,9 +34,9 @@ object ConfScope {
     * stream-stream join spent about 6 of its 8 s there, r5). Without
     * libhadoop, Spark's default checkpoint manager also forked a shell for
     * each such file's chmod and for each link check of its rename, about
-    * 25 ms per file; drains write them through
-    * [[graft.sources.CheckpointFiles]], which forks for neither
-    * (0.06–0.12 ms per atomic write). On a 4-core
+    * 26.6 ms per file; drains write them through
+    * [[graft.sources.CheckpointFiles]], which forks for neither (0.40 ms
+    * per file, medians of 200 writes). On a 4-core
     * host at sf0.01 the stream_drains suite read 4.85 s at width 4 and
     * 4.76 s at width 1 (medians of 3 perfbench runs): within noise, with a
     * quarter of the state stores. Every graded fixture's backlog fits one

@@ -69,7 +69,7 @@ object VersionedTable {
     * is `FileContext.rename(OVERWRITE)`; on a local file system it is
     * `FileSystem.rename`, because without libhadoop the FileContext
     * rename forked a `readlink` per link check and the create a `chmod`
-    * (about 384 and 90 forks per `--full` stream_drains benchmark run).
+    * (384 and 96 forks per `--full` stream_drains benchmark run).
     * It is atomic on HDFS and local filesystems; on object stores without
     * atomic rename (e.g. S3A) the rename is copy+delete, a small
     * torn-pointer window — front the pointer with a rename-capable store

@@ -32,9 +32,10 @@ import graft.sources.CheckpointFiles
   * scope). Without libhadoop, Spark's default manager forks a shell for
   * every chmod and for every link check of a rename-with-overwrite on a
   * local file system: 2,127 forks in one stream_drains benchmark run
-  * (about 100 per drain run), about 25 ms of each batch's WAL commit and
-  * as much of its offset commit. With this manager the run forks 17 times,
-  * none of them for a checkpoint file.
+  * (about 100 per drain run). In a traced pass of that run's 4 batches
+  * the WAL commits took 123.5 ms and the offset commits 127.5 ms; with
+  * this manager they take 8.5 and 29 ms, and the run forks 17 times, none
+  * of them for a checkpoint file.
   */
 object Drain {
 

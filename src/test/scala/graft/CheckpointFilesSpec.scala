@@ -43,7 +43,8 @@ class CheckpointFilesSpec extends AnyFunSuite {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val record = (batch: DataFrame, _: Long) => {
       seen.add(batch.sparkSession.conf.getOption(ManagerKey).getOrElse("default"))
-      batch.collect(); ()
+      batch.collect() // runs the batch, so its state store commits
+      ()
     }
     def counts = Tables.tableStream(spark, sf, "events")
       .groupBy("event_type").count()
