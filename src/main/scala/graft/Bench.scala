@@ -1,5 +1,23 @@
 package graft
 object Bench {
+  /** The itemized query names of the highest-numbered `BENCH_r<N>*.json`
+    * records in `dir` (`parsed.queries` of every core count's record of
+    * that round); none when `dir` holds no record. */
+  private[graft] def benchPins(dir: java.io.File): Set[String] = {
+    val Record = """BENCH_r(\d+).*\.json""".r
+    val records = Option(dir.listFiles).toSeq.flatten.flatMap(f =>
+      f.getName match { case Record(n) => Some(n.toInt -> f); case _ => None })
+    if (records.isEmpty) Set.empty
+    else {
+      val newest = records.map(_._1).max
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      records.collect { case (`newest`, f) => f }.flatMap { f =>
+        val names = json.readTree(f).path("parsed").path("queries").fieldNames()
+        scala.jdk.CollectionConverters.IteratorHasAsScala(names).asScala
+      }.toSet
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkEntry.localSession(
@@ -96,28 +114,8 @@ object Bench {
     // otherwise an improvement pushes a query out of the budgeted map and
     // the round-over-round diff misreads it as dropped (7 false drops in
     // PERF_r10). Pinned entries keep priority over new slow entries; the
-    // list is refreshed each round from the committed BENCH json.
-    val pinned = Set(
-      "a12_compaction_roundtrip", "a13_vacuum_roundtrip", "a14_asof_read",
-      "a15_change_feed", "a16_merge_delete", "a17_delete_feed",
-      "a18_zorder_roundtrip", "c12_salted_join", "c13_fuzzy_match",
-      "c2_star_join", "cdc_ivm_stream", "d16_weighted_median", "d4_having",
-      "dd_admit_near_stream", "dd_admit_stream", "dd_components_incr",
-      "dd_components_incr_stream", "dd_index_refresh", "dd_keep_one",
-      "dd_simhash_stream", "e13b_volume_stream", "e15_sliding_distinct",
-      "e18b_cusum_stream", "e19_concentration", "e20_theil_sen",
-      "e7b_funnel_stream", "e8b_retention_stream", "e9b_quantiles_stream",
-      "emb_bq_rerank", "emb_pca_topk", "f3_topk_per_key", "gr_kcore",
-      "gr_lpa", "gr_sssp", "i11b_sync_stream", "i14_stream_join",
-      "i3b_session_stream", "i4_watermark_stream", "i7b_upsert_stream",
-      "i7c_merge_stream", "j2b_containment", "lsh_ivf_maintain_stream",
-      "lsh_ivf_serve_stream", "lsh_ivfpq_refined", "lsh_ivfpq_topk",
-      "lsh_minhash_est", "lsh_minhash_pairs", "lsh_rp_multiprobe",
-      "lsh_rp_near_dup", "pp_score_calibration", "sem_dedup",
-      "ta_bigram_logprob", "ta_bm25", "ta_bpe_compress",
-      "ta_bpe_encode_stream", "ta_kn_bigram", "ta_novelty",
-      "ta_ppl_buckets", "ta_tfidf", "tp_decontaminate",
-      "tp_decontaminate_stream", "tp_dsir_stream")
+    // pins are read from the newest committed BENCH record (benchPins).
+    val pinned = benchPins(new java.io.File("."))
     val slowCandidates =
       (results.toSeq.filter { case (k, v) => v >= 0 && pinned(k) }
         .sortBy(-_._2) ++
@@ -133,15 +131,18 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val fast = results.collect { case (k, v) if v >= 0 && !itemized.contains(k) => v }
+    val folded = slowCandidates.size - itemized.size
     val failed = results.count(_._2 < 0)
     val total = results.values.filter(_ >= 0).sum + 1e6 * failed
     // "fail" appears only when nonzero — visible on regression, zero cost
     // on the healthy path.
     val failPart = if (failed > 0) s""","fail":$failed""" else ""
+    // "nover": pinned or slow entries the budget folded into nfast
+    val overPart = if (folded > 0) s""","nover":$folded""" else ""
     val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$slow,""" +
         s""""nfast":${fast.size},"fastsum":${fmt(fast.sum)},""" +
-        s""""detail":"bench_detail.json"$failPart,"sf":"${new java.io.File(sfDir).getName}"}"""
+        s""""detail":"bench_detail.json"$failPart$overPart,"sf":"${new java.io.File(sfDir).getName}"}"""
     if (line.length > 1800)
       System.err.println(s"BENCH WARN: JSON line ${line.length} chars — nearing the driver's 2000-char tail window")
     println(line)

@@ -1649,6 +1649,57 @@ object CoreRelational {
   // ------------------------------------------------------------------------
   // DuckDB oracle SQL — mirrors each query name-for-name with the same
   // ExactNum kernels and the same total-order ORDER BY.
+
+  /** The kNN supplier graph every gr_* oracle starts from, as CTEs ending
+    * in `e(src, dst, w)`: per-order supplier pairs → co-count → top-5 per
+    * supplier (total order: cnt desc, partner asc) → symmetrized canonical
+    * edges carrying the co-count as `w` (a function of the unordered pair,
+    * so carrying it leaves the edge set unchanged). */
+  private val knnEdgeSql =
+    """co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
+                     FROM lineitem),
+          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
+                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
+                GROUP BY 1, 2),
+          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
+                  UNION ALL SELECT sb, sa, cnt FROM p),
+          knn AS (SELECT s, pr, cnt FROM (
+                    SELECT s, pr, cnt, row_number() OVER (
+                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
+                    FROM dir) WHERE rn <= 5),
+          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst,
+                       cnt AS w
+                FROM knn)"""
+
+  /** [[knnEdgeSql]] plus `ed(u, v)`, each edge in both directions. */
+  private val knnArcSql =
+    s"""$knnEdgeSql,
+          ed AS (SELECT src AS u, dst AS v FROM e
+                 UNION ALL SELECT dst, src FROM e)"""
+
+  /** `tri(a, b, c)`: the oriented a<b<c triangles of the kNN edges. */
+  private val knnTriangleSql =
+    """tri AS (SELECT ab.src AS a, ab.dst AS b, bc.dst AS c
+                  FROM e ab JOIN e bc ON ab.dst = bc.src
+                  JOIN e ac ON ab.src = ac.src AND bc.dst = ac.dst)"""
+
+  /** `sym(u, v)`: the symmetrized adjacency re-capped at the 10 strongest
+    * partners per vertex (weight desc, partner asc — mirrors
+    * neighborSimOf's wedge-key bound). */
+  private val knnCapSql =
+    """sym0 AS (SELECT src AS u, dst AS v, w FROM e
+                   UNION ALL SELECT dst, src, w FROM e),
+          sym AS (SELECT u, v FROM (
+                    SELECT u, v, row_number() OVER (
+                      PARTITION BY u ORDER BY w DESC, v ASC) AS rn
+                    FROM sym0) WHERE rn <= 10)"""
+
+  /** Unrolled identical rounds as one CTE list: `round(r)` for each r. */
+  private def roundsSql(rounds: Range)(round: Int => String): String =
+    rounds.map(round).mkString(",\n          ")
+
+  import TemporalOps.lastWriterRankSql
+
   val oracle: Map[String, String] = Map(
     "a1_scan" ->
       "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
@@ -1696,12 +1747,11 @@ object CoreRelational {
     // batches (non-late-cohort rows with ts < 2024-01-20) — sequential
     // LWW merges are associative
     "a14_asof_read" ->
-      """SELECT user_id, event_id AS last_event_id,
+      s"""SELECT user_id, event_id AS last_event_id,
                 event_type AS last_type, epoch_us(ts) AS last_us
          FROM events
          WHERE user_id % 7 <> 0 AND ts < TIMESTAMP '2024-01-20 00:00:00'
-         QUALIFY row_number() OVER (PARTITION BY user_id
-                                    ORDER BY epoch_us(ts) DESC, event_id DESC) = 1
+         QUALIFY $lastWriterRankSql = 1
          ORDER BY user_id""",
 
     // v1→v2 key-level delta: LWW before (first two batches) full-keyed
@@ -1709,17 +1759,15 @@ object CoreRelational {
     // late-onboarding user_id%7 cohort), update when the winning row
     // changed; deletes impossible in LWW-upsert
     "a15_change_feed" ->
-      """WITH before AS (
+      s"""WITH before AS (
            SELECT user_id, event_id, event_type, epoch_us(ts) AS us
            FROM events
            WHERE user_id % 7 <> 0 AND ts < TIMESTAMP '2024-01-20 00:00:00'
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY epoch_us(ts) DESC, event_id DESC) = 1),
+           QUALIFY $lastWriterRankSql = 1),
          after AS (
            SELECT user_id, event_id, event_type, epoch_us(ts) AS us
            FROM events
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY epoch_us(ts) DESC, event_id DESC) = 1),
+           QUALIFY $lastWriterRankSql = 1),
          feed AS (
            SELECT a.user_id,
                   CASE WHEN b.user_id IS NULL THEN 'insert'
@@ -1745,11 +1793,10 @@ object CoreRelational {
     // visible MERGE snapshot: global LWW winner per key, keys whose
     // winner is a tombstone (error event) dropped at read
     "a16_merge_delete" ->
-      """SELECT user_id, event_id AS last_event_id,
+      s"""SELECT user_id, event_id AS last_event_id,
                 event_type AS last_type, epoch_us(ts) AS last_us
          FROM (SELECT user_id, event_id, event_type, ts,
-                      row_number() OVER (PARTITION BY user_id
-                        ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
+                      $lastWriterRankSql AS rn
                FROM events)
          WHERE rn = 1 AND event_type <> 'error'
          ORDER BY user_id""",
@@ -1758,11 +1805,10 @@ object CoreRelational {
     // (first two deterministic batches) full-outer LWW-not-tombstoned
     // after — insert / update / delete, nothing when invisible both sides
     "a17_delete_feed" ->
-      """WITH before AS (
+      s"""WITH before AS (
            SELECT user_id, event_id, event_type, epoch_us(ts) AS us
            FROM (SELECT user_id, event_id, event_type, ts,
-                        row_number() OVER (PARTITION BY user_id
-                          ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
+                        $lastWriterRankSql AS rn
                  FROM events
                  WHERE user_id % 7 <> 0
                    AND ts < TIMESTAMP '2024-01-20 00:00:00')
@@ -1770,8 +1816,7 @@ object CoreRelational {
          after AS (
            SELECT user_id, event_id, event_type, epoch_us(ts) AS us
            FROM (SELECT user_id, event_id, event_type, ts,
-                        row_number() OVER (PARTITION BY user_id
-                          ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
+                        $lastWriterRankSql AS rn
                  FROM events)
            WHERE rn = 1 AND event_type <> 'error'),
          feed AS (
@@ -1929,77 +1974,29 @@ object CoreRelational {
            ON c1.c_nationkey = c2.c_nationkey AND c1.c_custkey < c2.c_custkey
          GROUP BY 1 ORDER BY n_nationkey""",
 
-    // same construction: per-order supplier pairs → co-count → top-5 per
-    // supplier (total order: cnt desc, partner asc) → symmetrized
-    // canonical edges → oriented a<b<c triangle join
+    // the knnEdgeSql graph → oriented a<b<c triangle join
     "gr_knn_triangles" ->
-      """WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr FROM (
-                    SELECT s, pr, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst
-                FROM knn),
-          tri AS (SELECT ab.src AS a, ab.dst AS b, bc.dst AS c
-                  FROM e ab JOIN e bc ON ab.dst = bc.src
-                  JOIN e ac ON ab.src = ac.src AND bc.dst = ac.dst)
+      s"""WITH $knnEdgeSql,
+          $knnTriangleSql
           SELECT id AS s_suppkey, count(*) AS n_triangles
           FROM (SELECT a AS id FROM tri
                 UNION ALL SELECT b FROM tri
                 UNION ALL SELECT c FROM tri)
           GROUP BY id ORDER BY s_suppkey""",
 
-    // same knn edge CTE; symmetrized degree histogram
+    // knnEdgeSql; symmetrized degree histogram
     "gr_degree_dist" ->
-      """WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr FROM (
-                    SELECT s, pr, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst
-                FROM knn),
+      s"""WITH $knnEdgeSql,
           ed AS (SELECT src AS u FROM e UNION ALL SELECT dst FROM e),
           deg AS (SELECT u, count(*) AS deg FROM ed GROUP BY u)
           SELECT deg, count(*) AS n_vertices
           FROM deg GROUP BY deg ORDER BY deg""",
 
-    // same knn edge CTE; symmetrized adjacency re-capped at the 10
-    // strongest partners per vertex (weight desc, partner asc — mirrors
-    // neighborSimOf's wedge-key bound), then common neighbors via the
+    // knnEdgeSql re-capped by knnCapSql, then common neighbors via the
     // two-path join, neighbor Jaccard from the capped degrees
     "gr_node_sim" ->
-      s"""WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr, cnt FROM (
-                    SELECT s, pr, cnt, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst,
-                       cnt AS w
-                FROM knn),
-          sym0 AS (SELECT src AS u, dst AS v, w FROM e
-                   UNION ALL SELECT dst, src, w FROM e),
-          sym AS (SELECT u, v FROM (
-                    SELECT u, v, row_number() OVER (
-                      PARTITION BY u ORDER BY w DESC, v ASC) AS rn
-                    FROM sym0) WHERE rn <= 10),
+      s"""WITH $knnEdgeSql,
+          $knnCapSql,
           deg AS (SELECT u, count(*) AS deg FROM sym GROUP BY u),
           cn AS (SELECT l.u AS a, r.u AS b, count(*) AS common
                  FROM sym l JOIN sym r ON l.v = r.v AND l.u < r.u
@@ -2011,25 +2008,11 @@ object CoreRelational {
           FROM cn JOIN deg da ON cn.a = da.u JOIN deg db ON cn.b = db.u
           ORDER BY cn.a, cn.b""",
 
-    // same knn edge + triangle CTEs; degree from the symmetrized union,
-    // one small rational per vertex
+    // knnEdgeSql + knnTriangleSql; degree from the symmetrized union, one
+    // small rational per vertex
     "gr_clustering_coef" ->
-      s"""WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr FROM (
-                    SELECT s, pr, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst
-                FROM knn),
-          tri AS (SELECT ab.src AS a, ab.dst AS b, bc.dst AS c
-                  FROM e ab JOIN e bc ON ab.dst = bc.src
-                  JOIN e ac ON ab.src = ac.src AND bc.dst = ac.dst),
+      s"""WITH $knnEdgeSql,
+          $knnTriangleSql,
           tcnt AS (SELECT id AS u, CAST(count(*) AS BIGINT) AS n_triangles
                    FROM (SELECT a AS id FROM tri
                          UNION ALL SELECT b FROM tri
@@ -2047,29 +2030,11 @@ object CoreRelational {
           FROM deg LEFT JOIN tcnt ON deg.u = tcnt.u
           ORDER BY s_suppkey""",
 
-    // same knn + cap CTEs as gr_node_sim; strictly-2-hop targets anti-join
-    // the 1-hop set, and harmonic lands on the exact .5 grid
+    // knnEdgeSql + knnCapSql as gr_node_sim; strictly-2-hop targets
+    // anti-join the 1-hop set, and harmonic lands on the exact .5 grid
     "gr_harmonic" ->
-      """WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr, cnt FROM (
-                    SELECT s, pr, cnt, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst,
-                       cnt AS w
-                FROM knn),
-          sym0 AS (SELECT src AS u, dst AS v, w FROM e
-                   UNION ALL SELECT dst, src, w FROM e),
-          sym AS (SELECT u, v FROM (
-                    SELECT u, v, row_number() OVER (
-                      PARTITION BY u ORDER BY w DESC, v ASC) AS rn
-                    FROM sym0) WHERE rn <= 10),
+      s"""WITH $knnEdgeSql,
+          $knnCapSql,
           two AS (
             SELECT u, t FROM (
               SELECT DISTINCT l.u AS u, r.v AS t
@@ -2085,154 +2050,66 @@ object CoreRelational {
           FROM n1 LEFT JOIN n2 ON n1.u = n2.u
           ORDER BY node""",
 
-    // same knn edge CTE; then three damped power-iteration rounds in the
+    // knnArcSql; then three damped power-iteration rounds in the
     // identical scaled-integer arithmetic (`//` = Spark's `div` for the
     // all-positive operands here)
     "gr_pagerank" ->
-      """WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr FROM (
-                    SELECT s, pr, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst
-                FROM knn),
-          ed AS (SELECT src AS u, dst AS v FROM e
-                 UNION ALL SELECT dst, src FROM e),
+      s"""WITH $knnArcSql,
           deg AS (SELECT u AS id, count(*) AS deg FROM ed GROUP BY 1),
           pr0 AS (SELECT id, deg, CAST(1000000 AS BIGINT) AS pr FROM deg),
-          pr1 AS (SELECT deg.id, deg.deg,
-                         CAST(150000 + (85 * sum(pr0.pr // pr0.deg)) // 100
+          ${roundsSql(1 to 3)(r => s"""pr$r AS (SELECT deg.id, deg.deg,
+                         CAST(150000 + (85 * sum(pr${r - 1}.pr // pr${r - 1}.deg)) // 100
                               AS BIGINT) AS pr
-                  FROM ed JOIN pr0 ON ed.u = pr0.id
+                  FROM ed JOIN pr${r - 1} ON ed.u = pr${r - 1}.id
                           JOIN deg ON ed.v = deg.id
-                  GROUP BY 1, 2),
-          pr2 AS (SELECT deg.id, deg.deg,
-                         CAST(150000 + (85 * sum(pr1.pr // pr1.deg)) // 100
-                              AS BIGINT) AS pr
-                  FROM ed JOIN pr1 ON ed.u = pr1.id
-                          JOIN deg ON ed.v = deg.id
-                  GROUP BY 1, 2),
-          pr3 AS (SELECT deg.id, deg.deg,
-                         CAST(150000 + (85 * sum(pr2.pr // pr2.deg)) // 100
-                              AS BIGINT) AS pr
-                  FROM ed JOIN pr2 ON ed.u = pr2.id
-                          JOIN deg ON ed.v = deg.id
-                  GROUP BY 1, 2)
+                  GROUP BY 1, 2)""")}
           SELECT id AS s_suppkey, pr AS pr_fixed
           FROM pr3 ORDER BY s_suppkey""",
 
-    // same knn edge CTE carrying the weight; four unrolled Bellman-Ford
-    // union+min rounds from the every-10th-supplier seed set
+    // knnEdgeSql's weights as costs; four unrolled Bellman-Ford union+min
+    // rounds from the every-10th-supplier seed set
     "gr_sssp" ->
-      """WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr, cnt FROM (
-                    SELECT s, pr, cnt, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst,
-                       cnt AS w
-                FROM knn),
+      s"""WITH $knnEdgeSql,
           ew AS (SELECT src AS u, dst AS v,
                         greatest(1, 1000 // w) AS cost FROM e
                  UNION ALL
                  SELECT dst, src, greatest(1, 1000 // w) FROM e),
           d0 AS (SELECT s_suppkey AS id, CAST(0 AS BIGINT) AS dist
                  FROM supplier WHERE s_suppkey % 10 = 1),
-          d1 AS (SELECT id, min(dist) AS dist FROM (
-                   SELECT id, dist FROM d0
+          ${roundsSql(1 to 4)(r => s"""d$r AS (SELECT id, min(dist) AS dist FROM (
+                   SELECT id, dist FROM d${r - 1}
                    UNION ALL
-                   SELECT ew.v, d0.dist + ew.cost FROM d0 JOIN ew ON d0.id = ew.u
-                 ) GROUP BY id),
-          d2 AS (SELECT id, min(dist) AS dist FROM (
-                   SELECT id, dist FROM d1
-                   UNION ALL
-                   SELECT ew.v, d1.dist + ew.cost FROM d1 JOIN ew ON d1.id = ew.u
-                 ) GROUP BY id),
-          d3 AS (SELECT id, min(dist) AS dist FROM (
-                   SELECT id, dist FROM d2
-                   UNION ALL
-                   SELECT ew.v, d2.dist + ew.cost FROM d2 JOIN ew ON d2.id = ew.u
-                 ) GROUP BY id),
-          d4 AS (SELECT id, min(dist) AS dist FROM (
-                   SELECT id, dist FROM d3
-                   UNION ALL
-                   SELECT ew.v, d3.dist + ew.cost FROM d3 JOIN ew ON d3.id = ew.u
-                 ) GROUP BY id)
+                   SELECT ew.v, d${r - 1}.dist + ew.cost FROM d${r - 1} JOIN ew ON d${r - 1}.id = ew.u
+                 ) GROUP BY id)""")}
           SELECT id AS s_suppkey, dist AS dist_fixed
           FROM d4 ORDER BY s_suppkey""",
 
-    // same knn edge CTE; three unrolled peel rounds (k=2), then the final
+    // knnArcSql; three unrolled peel rounds (k=2), then the final
     // in-subgraph degree
     "gr_kcore" ->
-      """WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr FROM (
-                    SELECT s, pr, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst
-                FROM knn),
-          ed AS (SELECT src AS u, dst AS v FROM e
-                 UNION ALL SELECT dst, src FROM e),
+      s"""WITH $knnArcSql,
           a1 AS (SELECT u AS id FROM ed GROUP BY 1 HAVING count(*) >= 2),
-          a2 AS (SELECT u AS id FROM ed
-                 WHERE u IN (SELECT id FROM a1) AND v IN (SELECT id FROM a1)
-                 GROUP BY 1 HAVING count(*) >= 2),
-          a3 AS (SELECT u AS id FROM ed
-                 WHERE u IN (SELECT id FROM a2) AND v IN (SELECT id FROM a2)
-                 GROUP BY 1 HAVING count(*) >= 2)
+          ${roundsSql(2 to 3)(r => s"""a$r AS (SELECT u AS id FROM ed
+                 WHERE u IN (SELECT id FROM a${r - 1}) AND v IN (SELECT id FROM a${r - 1})
+                 GROUP BY 1 HAVING count(*) >= 2)""")}
           SELECT u AS s_suppkey, count(*) AS core_deg FROM ed
           WHERE u IN (SELECT id FROM a3) AND v IN (SELECT id FROM a3)
           GROUP BY 1 ORDER BY s_suppkey""",
 
-    // Two synchronous LPA rounds unrolled CTE by CTE: plurality label
-    // among previous-round neighbor labels, min-label tie-break.
+    // knnArcSql; two synchronous LPA rounds unrolled CTE by CTE:
+    // plurality label among previous-round neighbor labels, min-label
+    // tie-break. (The round opens on its own line: a quoted `v$…` reads
+    // as a version directory to VersionedTableSpec's layout scan.)
     "gr_lpa" ->
-      """WITH co AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
-                     FROM lineitem),
-          p AS (SELECT x.sk AS sa, y.sk AS sb, count(*) AS cnt
-                FROM co x JOIN co y ON x.ok = y.ok AND x.sk < y.sk
-                GROUP BY 1, 2),
-          dir AS (SELECT sa AS s, sb AS pr, cnt FROM p
-                  UNION ALL SELECT sb, sa, cnt FROM p),
-          knn AS (SELECT s, pr FROM (
-                    SELECT s, pr, row_number() OVER (
-                      PARTITION BY s ORDER BY cnt DESC, pr ASC) AS rn
-                    FROM dir) WHERE rn <= 5),
-          e AS (SELECT DISTINCT least(s, pr) AS src, greatest(s, pr) AS dst
-                FROM knn),
-          ed AS (SELECT src AS u, dst AS v FROM e
-                 UNION ALL SELECT dst, src FROM e),
+      s"""WITH $knnArcSql,
           l0 AS (SELECT DISTINCT u AS id, u AS lbl FROM ed),
-          v1 AS (SELECT ed.u, l0.lbl, count(*) AS n
-                 FROM ed JOIN l0 ON ed.v = l0.id GROUP BY 1, 2),
-          l1 AS (SELECT u AS id, lbl FROM (
+          ${roundsSql(1 to 2)(r => s"""
+          v$r AS (SELECT ed.u, l${r - 1}.lbl, count(*) AS n
+                 FROM ed JOIN l${r - 1} ON ed.v = l${r - 1}.id GROUP BY 1, 2),
+          l$r AS (SELECT u AS id, lbl FROM (
                    SELECT *, row_number() OVER (
                      PARTITION BY u ORDER BY n DESC, lbl ASC) AS rn
-                   FROM v1) WHERE rn = 1),
-          v2 AS (SELECT ed.u, l1.lbl, count(*) AS n
-                 FROM ed JOIN l1 ON ed.v = l1.id GROUP BY 1, 2),
-          l2 AS (SELECT u AS id, lbl FROM (
-                   SELECT *, row_number() OVER (
-                     PARTITION BY u ORDER BY n DESC, lbl ASC) AS rn
-                   FROM v2) WHERE rn = 1)
+                   FROM v$r) WHERE rn = 1)""")}
           SELECT id AS s_suppkey, lbl AS community FROM l2
           ORDER BY s_suppkey""",
 

@@ -2079,7 +2079,17 @@ object LlmOps {
       regexp_count(col("text"), lit(RedactPattern)).cast("long").as("n_hits"),
       md5(regexp_replace(col("text"), RedactPattern, "[X]")).as("red_md5"))
 
-  private[operators] val toksSql = "string_split(text, ' ')"
+  // DuckDB-side shared fragments.
+  private[graft] val toksSql = "string_split(text, ' ')"
+  /** The distinct word 3-gram shingles of `text`. */
+  private[graft] val shSql =
+    s"""list_distinct(list_transform(range(1, len($toksSql) - 1),
+        i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2]))"""
+  /** The distinct shingle hashes (md5 prefix mod P) of [[shSql]], as
+    * [[shingleIndex]] hashes them: where every shingle oracle starts. */
+  private[graft] val shHashSql =
+    s"""list_distinct(list_transform($shSql,
+              s -> ('0x'||substr(md5(s),1,15))::BIGINT % $P))"""
 
   /** DuckDB CTE chain ending in `pairs(doc_a, doc_b, jac)` — the oracle
     * mirror of [[jaccardPairsOf]] at threshold `tau`, including the
@@ -2090,10 +2100,7 @@ object LlmOps {
     val blkEq = if (blockOnLength) "AND x.blk = y.blk " else ""
     s"""docs AS (
             SELECT doc_id, lang, (len($toksSql)) // 10 AS blk,
-                   list_distinct(list_transform(
-                     list_distinct(list_transform(range(1, len($toksSql) - 1),
-                       i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2])),
-                     s -> ('0x'||substr(md5(s),1,15))::BIGINT % $P)) AS sh
+                   $shHashSql AS sh
             FROM documents),
           sizes AS (SELECT doc_id, len(sh) AS nsh FROM docs),
           inv AS (SELECT doc_id, lang, blk, unnest(sh) AS h FROM docs),
@@ -2134,18 +2141,24 @@ object LlmOps {
                  ${sqlRound4("(CAST(sum(slp) AS BIGINT)/1e7)/CAST(sum(m) AS BIGINT)")} AS avg_logprob
           FROM slps GROUP BY doc_id)"""
 
-  /** The true τ=0.3 connected-components closure (recursive CTE) — the
-    * oracle for dd_components AND both incremental paths (batch +
-    * streaming), which must reproduce the full rebuild row-for-row. */
-  private[graft] lazy val fullClosureSql: String =
-    s"""WITH RECURSIVE ${jacPairsCte(0.3)},
+  /** The τ=0.3 pairs as undirected edges `bi(a, b)` and their transitive
+    * closure `reach(src, dst)` from every doc (recursive CTE) — shared by
+    * the components oracles. */
+  private lazy val closureReachSql: String =
+    s"""${jacPairsCte(0.3)},
         bi AS (SELECT doc_a AS a, doc_b AS b FROM pairs
                UNION ALL
                SELECT doc_b AS a, doc_a AS b FROM pairs),
         reach(src, dst) AS (
           SELECT doc_id, doc_id FROM documents
           UNION
-          SELECT r.src, e.b FROM reach r JOIN bi e ON r.dst = e.a)
+          SELECT r.src, e.b FROM reach r JOIN bi e ON r.dst = e.a)"""
+
+  /** The true τ=0.3 connected-components closure (recursive CTE) — the
+    * oracle for dd_components AND both incremental paths (batch +
+    * streaming), which must reproduce the full rebuild row-for-row. */
+  private[graft] lazy val fullClosureSql: String =
+    s"""WITH RECURSIVE $closureReachSql
         SELECT src AS doc_id, min(dst) AS comp
         FROM reach GROUP BY src ORDER BY doc_id"""
 
@@ -2195,10 +2208,76 @@ object LlmOps {
     s"""seq0 AS (
           SELECT doc_id, CAST(unnest(range(len(l))) AS BIGINT) AS pos,
                  unnest(l) AS tok
-          FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)),
+          FROM (SELECT doc_id, $toksSql AS l FROM documents)),
         ${bpeRoundSql("seq0", 1)},
         ${bpeRoundSql("seq1", 2)},
         ${bpeRoundSql("seq2", 3)}"""
+
+  /** `bg(doc_id, bg)`: each doc's word-bigram stream, one row per
+    * occurrence — the oracle side of [[bigramRows]]. */
+  private val bigramsSql =
+    s"""bg AS (
+            SELECT doc_id, unnest(list_transform(range(1, len(t)),
+                   i -> t[i] || ' ' || t[i+1])) AS bg
+            FROM (SELECT doc_id, $toksSql AS t FROM documents))"""
+
+  /** [[bigramsSql]] counted per doc: `occ(doc_id, bg, m)`, the base of
+    * both bigram LM oracles. */
+  private val bigramOccSql =
+    s"""$bigramsSql,
+          occ AS (SELECT doc_id, bg, count(*) AS m FROM bg GROUP BY 1, 2)"""
+
+  /** A bigram LM oracle's report over `slps(doc_id, m, slp)`: bigram count,
+    * mean log-prob from the 1e-7-snapped sums, pass at `minLogprob`. */
+  private def bigramScoreSql(minLogprob: String): String =
+    s"""SELECT doc_id, n_bigrams, avg_logprob,
+                 CAST(avg_logprob >= $minLogprob AS INT) AS pass
+          FROM (
+            SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_bigrams,
+                   ${sqlRound4("(CAST(sum(slp) AS BIGINT)/1e7)/CAST(sum(m) AS BIGINT)")} AS avg_logprob
+            FROM slps GROUP BY doc_id)
+          ORDER BY doc_id"""
+
+  /** The winnowing chain dd_substr_spans and dd_substr_cut share, ending
+    * in `isl`: per-doc token hashes (`base`, plus the token list as `toks`
+    * when `keepToks`), every 10-gram's Horner hash, the df > 50 cap, the
+    * cross-doc hash matches and their diagonal islands. */
+  private def substrIslandsSql(keepToks: Boolean): String = {
+    val toks = if (keepToks) s"$toksSql AS toks, " else ""
+    s"""base AS (
+            SELECT doc_id,
+                   list_transform($toksSql,
+                     t -> ('0x'||substr(md5(t),1,15))::BIGINT % $P) AS hs,
+                   ${toks}len($toksSql) AS n
+            FROM documents),
+          expanded AS (
+            SELECT doc_id, hs, unnest(generate_series(0, n - 10)) AS pos
+            FROM base WHERE n >= 10),
+          g0 AS (
+            SELECT doc_id, pos,
+                   list_reduce(list_slice(hs, pos+1, pos+10),
+                     (a, b) -> (a * $HornerB + b) % $P) AS h
+            FROM expanded),
+          hot AS (SELECT h FROM g0 GROUP BY h HAVING count(*) > 50),
+          g AS (SELECT g0.* FROM g0 ANTI JOIN hot USING (h)),
+          m AS (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb,
+                   a.pos - b.pos AS diag
+            FROM g a JOIN g b ON a.h = b.h AND a.doc_id < b.doc_id),
+          isl AS (
+            SELECT doc_a, doc_b, diag, pa, pb,
+                   pa - row_number() OVER (PARTITION BY doc_a, doc_b, diag
+                     ORDER BY pa) AS grp
+            FROM m)"""
+  }
+
+  /** `terms(doc_id, dlen, word, cnt)`: each doc's length and per-word
+    * counts, shared by ta_tfidf and ta_bm25. */
+  private val termsSql =
+    s"""terms AS (
+            SELECT doc_id, len($toksSql) AS dlen, word, count(*) AS cnt
+            FROM (SELECT doc_id, text, unnest($toksSql) AS word FROM documents)
+            GROUP BY doc_id, len($toksSql), word)"""
 
   val oracle: Map[String, String] = Map(
     "ta_bpe_merge" ->
@@ -2267,14 +2346,7 @@ object LlmOps {
     // the components closure again, folded to cluster sizes then to the
     // size histogram (HUGEINT sums cast back to BIGINT for hashing)
     "dd_cluster_stats" ->
-      s"""WITH RECURSIVE ${jacPairsCte(0.3)},
-          bi AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                 UNION ALL
-                 SELECT doc_b AS a, doc_a AS b FROM pairs),
-          reach(src, dst) AS (
-            SELECT doc_id, doc_id FROM documents
-            UNION
-            SELECT r.src, e.b FROM reach r JOIN bi e ON r.dst = e.a),
+      s"""WITH RECURSIVE $closureReachSql,
           comp AS (SELECT src AS doc_id, min(dst) AS comp
                    FROM reach GROUP BY src),
           csz AS (SELECT comp, count(*) AS cluster_size
@@ -2310,7 +2382,7 @@ object LlmOps {
           SELECT * FROM r2 UNION ALL SELECT * FROM d3
           ORDER BY doc_id""",
 
-    // same pairs CTE as j2, filtered to cross-side pairs, left-joined back
+    // jacPairsCte(0.5) as in j2, filtered to cross-side pairs, left-joined back
     // to the new-batch slice so admitted docs report zero hits
     "dd_incremental" ->
       s"""WITH ${jacPairsCte(0.5)},
@@ -2325,7 +2397,7 @@ object LlmOps {
           FROM documents d LEFT JOIN hits h USING (doc_id)
           WHERE d.doc_id % 5 = 0 ORDER BY d.doc_id""",
 
-    // same pairs CTE as j2, then two pk joins to the source map and a
+    // jacPairsCte(0.5) as in j2, then two pk joins to the source map and a
     // grid-snapped mean per unordered source pair
     "dd_source_overlap" ->
       s"""WITH ${jacPairsCte(0.5)},
@@ -2340,14 +2412,7 @@ object LlmOps {
           FROM lab GROUP BY 1, 2 ORDER BY 1, 2""",
 
     "dd_keep_one" ->
-      s"""WITH RECURSIVE ${jacPairsCte(0.3)},
-          bi AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                 UNION ALL
-                 SELECT doc_b AS a, doc_a AS b FROM pairs),
-          reach(src, dst) AS (
-            SELECT doc_id, doc_id FROM documents
-            UNION
-            SELECT r.src, e.b FROM reach r JOIN bi e ON r.dst = e.a),
+      s"""WITH RECURSIVE $closureReachSql,
           comp AS (SELECT src AS doc_id, min(dst) AS comp FROM reach GROUP BY src)
           SELECT d.doc_id, d.lang, d.source, d.n_chars
           FROM documents d JOIN comp c ON d.doc_id = c.doc_id
@@ -2357,14 +2422,7 @@ object LlmOps {
     // same recursive closure as dd_keep_one; the representative is the
     // score argmax instead of the min id
     "dd_keep_best" ->
-      s"""WITH RECURSIVE ${jacPairsCte(0.3)},
-          bi AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                 UNION ALL
-                 SELECT doc_b AS a, doc_a AS b FROM pairs),
-          reach(src, dst) AS (
-            SELECT doc_id, doc_id FROM documents
-            UNION
-            SELECT r.src, e.b FROM reach r JOIN bi e ON r.dst = e.a),
+      s"""WITH RECURSIVE $closureReachSql,
           comp AS (SELECT src AS doc_id, min(dst) AS comp FROM reach GROUP BY src),
           scored AS (
             SELECT doc_id, lang, source,
@@ -2450,10 +2508,7 @@ object LlmOps {
           GROUP BY word ORDER BY cnt DESC, word ASC""",
 
     "ta_tfidf" ->
-      s"""WITH terms AS (
-            SELECT doc_id, len($toksSql) AS dlen, word, count(*) AS cnt
-            FROM (SELECT doc_id, text, unnest($toksSql) AS word FROM documents)
-            GROUP BY doc_id, len($toksSql), word),
+      s"""WITH $termsSql,
           n AS (SELECT count(*) AS total FROM documents),
           scored AS (
             SELECT doc_id, word,
@@ -2514,13 +2569,10 @@ object LlmOps {
                    AS r2
           FROM b""",
 
-    // same terms CTE as ta_tfidf; idf/tf-part mirrored operand for
+    // termsSql as in ta_tfidf; idf/tf-part mirrored operand for
     // operand, snapped to 1e-7 pre-sum; avgdl = exact long sum ÷ count
     "ta_bm25" ->
-      s"""WITH terms AS (
-            SELECT doc_id, len($toksSql) AS dlen, word, count(*) AS cnt
-            FROM (SELECT doc_id, text, unnest($toksSql) AS word FROM documents)
-            GROUP BY doc_id, len($toksSql), word),
+      s"""WITH $termsSql,
           navg AS (
             SELECT CAST(count(*) AS DOUBLE) AS n_total,
                    CAST(sum(len($toksSql)) AS DOUBLE)/count(*) AS avgdl
@@ -2763,11 +2815,7 @@ object LlmOps {
     // Same Laplace-smoothed model arithmetic as the Spark side: identical
     // bigram stream, identical grid-snapped ln folded as BIGINTs.
     "ta_bigram_logprob" ->
-      s"""WITH bg AS (
-            SELECT doc_id, unnest(list_transform(range(1, len(t)),
-                   i -> t[i] || ' ' || t[i+1])) AS bg
-            FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-          occ AS (SELECT doc_id, bg, count(*) AS m FROM bg GROUP BY 1, 2),
+      s"""WITH $bigramOccSql,
           cb AS (SELECT bg, CAST(sum(m) AS BIGINT) AS cb FROM occ GROUP BY bg),
           ca AS (SELECT split_part(bg, ' ', 1) AS w1, CAST(sum(cb) AS BIGINT) AS ca
                  FROM cb GROUP BY 1),
@@ -2778,20 +2826,10 @@ object LlmOps {
                    m * CAST(round(ln((CAST(cb AS DOUBLE) + 1)/(ca + v))*1e7) AS BIGINT) AS slp
             FROM occ JOIN cb USING (bg)
             JOIN ca ON split_part(occ.bg, ' ', 1) = ca.w1 CROSS JOIN voc)
-          SELECT doc_id, n_bigrams, avg_logprob,
-                 CAST(avg_logprob >= -3.45 AS INT) AS pass
-          FROM (
-            SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_bigrams,
-                   ${sqlRound4("(CAST(sum(slp) AS BIGINT)/1e7)/CAST(sum(m) AS BIGINT)")} AS avg_logprob
-            FROM slps GROUP BY doc_id)
-          ORDER BY doc_id""",
+          ${bigramScoreSql("-3.45")}""",
 
     "ta_kn_bigram" ->
-      s"""WITH bg AS (
-            SELECT doc_id, unnest(list_transform(range(1, len(t)),
-                   i -> t[i] || ' ' || t[i+1])) AS bg
-            FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-          occ AS (SELECT doc_id, bg, count(*) AS m FROM bg GROUP BY 1, 2),
+      s"""WITH $bigramOccSql,
           cb AS (SELECT bg, CAST(sum(m) AS BIGINT) AS cb,
                         split_part(bg, ' ', 1) AS w1,
                         split_part(bg, ' ', 2) AS w2
@@ -2806,19 +2844,10 @@ object LlmOps {
                      + 0.75 * n1r / ca * (n1l / tt))*1e7) AS BIGINT) AS slp
             FROM occ JOIN cb USING (bg)
             JOIN ctx USING (w1) JOIN cont USING (w2) CROSS JOIN tt)
-          SELECT doc_id, n_bigrams, avg_logprob,
-                 CAST(avg_logprob >= -3.40 AS INT) AS pass
-          FROM (
-            SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_bigrams,
-                   ${sqlRound4("(CAST(sum(slp) AS BIGINT)/1e7)/CAST(sum(m) AS BIGINT)")} AS avg_logprob
-            FROM slps GROUP BY doc_id)
-          ORDER BY doc_id""",
+          ${bigramScoreSql("-3.40")}""",
 
     "ta_repetition" ->
-      s"""WITH bg AS (
-            SELECT doc_id, unnest(list_transform(range(1, len(t)),
-                   i -> t[i] || ' ' || t[i+1])) AS bg
-            FROM (SELECT doc_id, $toksSql AS t FROM documents)),
+      s"""WITH $bigramsSql,
           cnts AS (SELECT doc_id, bg, count(*) AS cnt FROM bg GROUP BY 1, 2)
           SELECT doc_id, n_bigrams, n_unique,
                  ${sqlRound4("1.0 - CAST(n_unique AS DOUBLE)/n_bigrams")} AS dup_frac,
@@ -2897,11 +2926,7 @@ object LlmOps {
     // over the hash, boilerplate = df >= BoilerplateDf.
     "ta_boilerplate" ->
       s"""WITH inv AS (
-            SELECT doc_id,
-                   unnest(list_distinct(list_transform(
-                     list_distinct(list_transform(range(1, len($toksSql) - 1),
-                       i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2])),
-                     s -> ('0x'||substr(md5(s),1,15))::BIGINT % $P))) AS h
+            SELECT doc_id, unnest($shHashSql) AS h
             FROM documents),
           wdf AS (SELECT doc_id, h, count(*) OVER (PARTITION BY h) AS df
                   FROM inv)
@@ -2919,31 +2944,7 @@ object LlmOps {
     // k-grams via list_slice at each start position (equivalent to the
     // Spark lead-chain), same md5 hash, df cap, diagonal island merge.
     "dd_substr_spans" ->
-      s"""WITH base AS (
-            SELECT doc_id,
-                   list_transform($toksSql,
-                     t -> ('0x'||substr(md5(t),1,15))::BIGINT % $P) AS hs,
-                   len($toksSql) AS n
-            FROM documents),
-          expanded AS (
-            SELECT doc_id, hs, unnest(generate_series(0, n - 10)) AS pos
-            FROM base WHERE n >= 10),
-          g0 AS (
-            SELECT doc_id, pos,
-                   list_reduce(list_slice(hs, pos+1, pos+10),
-                     (a, b) -> (a * $HornerB + b) % $P) AS h
-            FROM expanded),
-          hot AS (SELECT h FROM g0 GROUP BY h HAVING count(*) > 50),
-          g AS (SELECT g0.* FROM g0 ANTI JOIN hot USING (h)),
-          m AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb,
-                   a.pos - b.pos AS diag
-            FROM g a JOIN g b ON a.h = b.h AND a.doc_id < b.doc_id),
-          isl AS (
-            SELECT doc_a, doc_b, diag, pa, pb,
-                   pa - row_number() OVER (PARTITION BY doc_a, doc_b, diag
-                     ORDER BY pa) AS grp
-            FROM m)
+      s"""WITH ${substrIslandsSql(keepToks = false)}
           SELECT doc_a, doc_b, CAST(min(pa) AS INT) AS start_a,
                  CAST(min(pb) AS INT) AS start_b,
                  CAST(count(*) + 9 AS BIGINT) AS span_len
@@ -2951,36 +2952,12 @@ object LlmOps {
           HAVING count(*) + 9 >= 20
           ORDER BY doc_a, doc_b, start_a, start_b""",
 
-    // Same span CTEs, then: union span coverage on the doc_b side, anti-join
+    // substrIslandsSql as in dd_substr_spans, then: union span coverage on the doc_b side, anti-join
     // the positional tokens, rebuild with an ORDER BY pos string_agg
     // (mirrors Spark's array_sort(struct(pos, tok)) rebuild), restore
     // span-free docs via right join.
     "dd_substr_cut" ->
-      s"""WITH base AS (
-            SELECT doc_id,
-                   list_transform($toksSql,
-                     t -> ('0x'||substr(md5(t),1,15))::BIGINT % $P) AS hs,
-                   $toksSql AS toks, len($toksSql) AS n
-            FROM documents),
-          expanded AS (
-            SELECT doc_id, hs, unnest(generate_series(0, n - 10)) AS pos
-            FROM base WHERE n >= 10),
-          g0 AS (
-            SELECT doc_id, pos,
-                   list_reduce(list_slice(hs, pos+1, pos+10),
-                     (a, b) -> (a * $HornerB + b) % $P) AS h
-            FROM expanded),
-          hot AS (SELECT h FROM g0 GROUP BY h HAVING count(*) > 50),
-          g AS (SELECT g0.* FROM g0 ANTI JOIN hot USING (h)),
-          m AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb,
-                   a.pos - b.pos AS diag
-            FROM g a JOIN g b ON a.h = b.h AND a.doc_id < b.doc_id),
-          isl AS (
-            SELECT doc_a, doc_b, diag, pa, pb,
-                   pa - row_number() OVER (PARTITION BY doc_a, doc_b, diag
-                     ORDER BY pa) AS grp
-            FROM m),
+      s"""WITH ${substrIslandsSql(keepToks = true)},
           spans AS (
             SELECT doc_b, min(pb) AS sb, count(*) + 9 AS L
             FROM isl GROUP BY doc_a, doc_b, diag, grp
@@ -3022,14 +2999,11 @@ object LlmOps {
             GROUP BY doc_id)
           ORDER BY doc_id""",
 
-    // Same distinct-shingle hash construction as jacPairsCte's docs CTE;
-    // first occurrence = min(doc_id) per hash over the whole corpus.
+    // shHashSql, as in jacPairsCte's docs CTE; first occurrence =
+    // min(doc_id) per hash over the whole corpus.
     "ta_novelty" ->
       s"""WITH docs AS (
-            SELECT doc_id, list_distinct(list_transform(
-                     list_distinct(list_transform(range(1, len($toksSql) - 1),
-                       i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2])),
-                     s -> ('0x'||substr(md5(s),1,15))::BIGINT % $P)) AS sh
+            SELECT doc_id, $shHashSql AS sh
             FROM documents),
           inv AS (SELECT doc_id, unnest(sh) AS h FROM docs),
           first AS (SELECT h, min(doc_id) AS fd FROM inv GROUP BY h),

@@ -106,10 +106,7 @@ object Lsh {
         / 1e7).as("raw"))
 
   // DuckDB-side shared fragments.
-  private[graft] val toksSql = "string_split(text, ' ')"
-  private[graft] val shSql =
-    s"""list_distinct(list_transform(range(1, len($toksSql) - 1),
-        i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2]))"""
+  import LlmOps.{shHashSql, toksSql}
   private def dotSql(a: String, b: String): String =
     s"""list_reduce(list_prepend(0.0, list_transform(range(1, 65),
         i -> ($a[i]::DOUBLE) * ($b[i]::DOUBLE))), (acc, x) -> acc + x)"""
@@ -1348,6 +1345,115 @@ object Lsh {
 
   private lazy val pcaTopkChainSql: String = pcaChainSql(3)
 
+  /** The capped MinHash candidate chain lsh_minhash_pairs and
+    * lsh_minhash_est share: shingle hashes (`docs`), the df-capped
+    * inverted index (`inv`/`hot`/`capped`), 16 min-hashes (`sigs`), the
+    * 8 bands and their candidate pairs (`cand`), and each doc's capped
+    * hash list (`cdocs`). */
+  private val minhashCandSql =
+    s"""docs AS (
+            SELECT doc_id, $shHashSql AS hs
+            FROM documents),
+          inv AS (SELECT doc_id, unnest(hs) AS h FROM docs),
+          hot AS (SELECT h FROM inv GROUP BY h
+                  HAVING count(*) > ${LlmOps.MaxShingleDf}),
+          capped AS (SELECT inv.doc_id, inv.h FROM inv ANTI JOIN hot USING (h)),
+          sigs AS (
+            SELECT doc_id, $minColsSql
+            FROM capped
+            GROUP BY doc_id),
+          bands AS (
+            ${bandSelectsSql("sigs")}),
+          cand AS (
+            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+            FROM bands a JOIN bands b
+              ON a.band_idx = b.band_idx AND a.band_val = b.band_val
+             AND a.doc_id < b.doc_id),
+          cdocs AS (SELECT doc_id, list(h) AS ch FROM capped GROUP BY doc_id)"""
+
+  /** The 16×64 ±1 sign matrix (`mat`) and the signed projections
+    * (`proj(vec_id, j, raw)`) of the random-projection oracles — the
+    * mirror of [[signMatrix]] and [[projections]]. */
+  private val rpProjSql =
+    """mat AS (
+            SELECT j, i,
+                   CASE WHEN ('0x'||substr(md5('rp:'||j||':'||i),1,15))::BIGINT % 2 = 0
+                        THEN 1.0 ELSE -1.0 END AS sgn
+            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(i)),
+          proj AS (
+            SELECT vec_id, j,
+                   CAST(sum(CAST(round(x * sgn * 1e7) AS BIGINT)) AS BIGINT) / 1e7 AS raw
+            FROM (SELECT vec_id, i, CAST(embedding[i + 1] AS DOUBLE) AS x
+                  FROM embeddings, generate_series(0, 63) g(i))
+            JOIN mat USING (i)
+            GROUP BY vec_id, j)"""
+
+  /** The random-projection oracles' verification: the exact cosine of
+    * every `cand(vec_a, vec_b)` pair, kept at ≥ 0.4. */
+  private val rpCosineSql =
+    s"""e AS (
+            SELECT vec_id, embedding,
+                   sqrt(${dotSql("embedding", "embedding")}) AS nrm
+            FROM embeddings)
+          SELECT vec_a, vec_b, ${sqlRound4("cos_raw")} AS cos FROM (
+            SELECT vec_a, vec_b,
+                   ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos_raw
+            FROM cand JOIN e a ON cand.vec_a = a.vec_id
+                      JOIN e b ON cand.vec_b = b.vec_id)
+          WHERE cos_raw >= 0.4
+          ORDER BY vec_a, vec_b"""
+
+  /** The IVF top-5 oracle: the assignment chain ([[ivfAssignSql]] with
+    * `refine` Lloyd rounds), the query vectors picked by `querySet` (a
+    * clause over `normed`), in-cell cosine scoring and the top-5 rank
+    * rule (cos desc, vec_id asc). */
+  private[graft] def ivfTopkSql(refine: Int, querySet: String): String =
+    s"""WITH ${ivfAssignSql(10, refine)},
+          qs AS (SELECT vec_id AS query_id, embedding AS q, cell, nrm AS qn
+                 FROM normed $querySet),
+          scored AS (
+            SELECT qs.query_id, a.vec_id,
+                   ${dotSql("qs.q", "a.embedding")} / (qs.qn * a.nrm) AS cos_raw
+            FROM normed a JOIN qs ON a.cell = qs.cell)
+          SELECT query_id, CAST(rank AS INT) AS rank, vec_id,
+                 ${sqlRound4("cos_raw")} AS cos
+          FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                  ORDER BY cos_raw DESC, vec_id ASC) AS rank FROM scored)
+          WHERE rank <= 5
+          ORDER BY query_id, rank"""
+
+  /** The IVF-PQ candidate chain both IVF-PQ oracles share: the IVF cells,
+    * the PQ codebook, the per-query ADC table in 1e-4 ticks (`adc`) and
+    * each in-cell vector's summed ADC distance (`cand`). */
+  private val ivfpqCandSql =
+    s"""${ivfAssignSql(10)},
+          ${pqSql(8, 2)},
+          qs AS (SELECT vec_id AS query_id, embedding AS q, cell
+                 FROM assigned ORDER BY vec_id LIMIT 5),
+          adc AS (
+            SELECT q.query_id, c.sub, c.code,
+                   CAST(round((${pqDistSql("q.q", "c.sub", "c.cent")})*10000) AS BIGINT) AS dq
+            FROM qs q CROSS JOIN pcb c),
+          cand AS (
+            SELECT q.query_id, a.vec_id, CAST(sum(adc.dq) AS BIGINT) AS adist_tenk
+            FROM assigned a JOIN qs q ON a.cell = q.cell
+            JOIN pcodes pc ON pc.vec_id = a.vec_id
+            JOIN adc ON adc.query_id = q.query_id
+                    AND adc.sub = pc.sub AND adc.code = pc.code
+            GROUP BY 1, 2)"""
+
+  /** Each doc's bigram simhash (dedup on the bigram STRING, then hash —
+    * mirrors simhashBigramSigs) as `(doc_id, simhash)` rows, with the
+    * doc's hash list `hs` still in scope for a filter. */
+  private[graft] val bigramSimhashSql =
+    s"""SELECT doc_id, CAST($simhashTermsSql AS BIGINT) AS simhash
+            FROM (SELECT doc_id,
+                    list_transform(list_distinct(list_transform(
+                      range(1, len($toksSql)),
+                      i -> $toksSql[i] || ' ' || $toksSql[i+1])),
+                      t -> ('0x'||substr(md5(t),1,8))::BIGINT) AS hs
+                  FROM documents)"""
+
   val oracle: Map[String, String] = Map(
     "emb_matryoshka" ->
       s"""WITH corpus AS (
@@ -1461,29 +1567,8 @@ object Lsh {
           FROM per JOIN lab USING (label)
           ORDER BY vec_id""",
 
-    "lsh_minhash_pairs" -> {
-      val minCols = minColsSql
-      val bandSelects = bandSelectsSql("sigs")
-      s"""WITH docs AS (
-            SELECT doc_id, list_distinct(list_transform($shSql,
-              s -> ('0x'||substr(md5(s),1,15))::BIGINT % $P)) AS hs
-            FROM documents),
-          inv AS (SELECT doc_id, unnest(hs) AS h FROM docs),
-          hot AS (SELECT h FROM inv GROUP BY h
-                  HAVING count(*) > ${LlmOps.MaxShingleDf}),
-          capped AS (SELECT inv.doc_id, inv.h FROM inv ANTI JOIN hot USING (h)),
-          sigs AS (
-            SELECT doc_id, $minCols
-            FROM capped
-            GROUP BY doc_id),
-          bands AS (
-            $bandSelects),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-             AND a.doc_id < b.doc_id),
-          cdocs AS (SELECT doc_id, list(h) AS ch FROM capped GROUP BY doc_id)
+    "lsh_minhash_pairs" ->
+      s"""WITH $minhashCandSql
           SELECT doc_a, doc_b, ${sqlRound4("jac")} AS jac FROM (
             SELECT doc_a, doc_b,
                    CAST(len(list_intersect(cx.ch, cy.ch)) AS DOUBLE) /
@@ -1493,35 +1578,13 @@ object Lsh {
                       JOIN cdocs cx ON cand.doc_a = cx.doc_id
                       JOIN cdocs cy ON cand.doc_b = cy.doc_id)
           WHERE jac >= 0.5
-          ORDER BY doc_a, doc_b"""
-    },
+          ORDER BY doc_a, doc_b""",
 
     "lsh_minhash_est" -> {
-      val minCols = minColsSql
-      val bandSelects = bandSelectsSql("sigs")
       val matchSum = (0 until nHashes)
         .map(i => s"CASE WHEN sx.mh$i = sy.mh$i THEN 1 ELSE 0 END")
         .mkString("CAST(", " + ", " AS BIGINT)")
-      s"""WITH docs AS (
-            SELECT doc_id, list_distinct(list_transform($shSql,
-              s -> ('0x'||substr(md5(s),1,15))::BIGINT % $P)) AS hs
-            FROM documents),
-          inv AS (SELECT doc_id, unnest(hs) AS h FROM docs),
-          hot AS (SELECT h FROM inv GROUP BY h
-                  HAVING count(*) > ${LlmOps.MaxShingleDf}),
-          capped AS (SELECT inv.doc_id, inv.h FROM inv ANTI JOIN hot USING (h)),
-          sigs AS (
-            SELECT doc_id, $minCols
-            FROM capped
-            GROUP BY doc_id),
-          bands AS (
-            $bandSelects),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-             AND a.doc_id < b.doc_id),
-          cdocs AS (SELECT doc_id, list(h) AS ch FROM capped GROUP BY doc_id),
+      s"""WITH $minhashCandSql,
           scored AS (
             SELECT doc_a, doc_b,
                    $matchSum AS matches,
@@ -1557,18 +1620,7 @@ object Lsh {
          ORDER BY vec_id, j""",
 
     "lsh_rp_near_dup" ->
-      s"""WITH mat AS (
-            SELECT j, i,
-                   CASE WHEN ('0x'||substr(md5('rp:'||j||':'||i),1,15))::BIGINT % 2 = 0
-                        THEN 1.0 ELSE -1.0 END AS sgn
-            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(i)),
-          proj AS (
-            SELECT vec_id, j,
-                   CAST(sum(CAST(round(x * sgn * 1e7) AS BIGINT)) AS BIGINT) / 1e7 AS raw
-            FROM (SELECT vec_id, i, CAST(embedding[i + 1] AS DOUBLE) AS x
-                  FROM embeddings, generate_series(0, 63) g(i))
-            JOIN mat USING (i)
-            GROUP BY vec_id, j),
+      s"""WITH $rpProjSql,
           bands AS (
             SELECT vec_id, j // 4 AS band,
                    sum(CAST(raw >= 0 AS INT) * (1 << (j % 4))) AS band_val
@@ -1578,17 +1630,7 @@ object Lsh {
             FROM bands a JOIN bands b
               ON a.band = b.band AND a.band_val = b.band_val
              AND a.vec_id < b.vec_id),
-          e AS (
-            SELECT vec_id, embedding,
-                   sqrt(${dotSql("embedding", "embedding")}) AS nrm
-            FROM embeddings)
-          SELECT vec_a, vec_b, ${sqlRound4("cos_raw")} AS cos FROM (
-            SELECT vec_a, vec_b,
-                   ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos_raw
-            FROM cand JOIN e a ON cand.vec_a = a.vec_id
-                      JOIN e b ON cand.vec_b = b.vec_id)
-          WHERE cos_raw >= 0.4
-          ORDER BY vec_a, vec_b""",
+          $rpCosineSql""",
 
     "lsh_simhash" ->
       s"""SELECT doc_id, CAST($simhashTermsSql AS BIGINT) AS simhash
@@ -1598,20 +1640,7 @@ object Lsh {
                 FROM documents)
           ORDER BY doc_id""",
 
-    "lsh_ivf_topk" ->
-      s"""WITH ${ivfAssignSql(10)},
-          qs AS (SELECT vec_id AS query_id, embedding AS q, cell, nrm AS qn
-                 FROM normed ORDER BY vec_id LIMIT 5),
-          scored AS (
-            SELECT qs.query_id, a.vec_id,
-                   ${dotSql("qs.q", "a.embedding")} / (qs.qn * a.nrm) AS cos_raw
-            FROM normed a JOIN qs ON a.cell = qs.cell)
-          SELECT query_id, CAST(rank AS INT) AS rank, vec_id,
-                 ${sqlRound4("cos_raw")} AS cos
-          FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY cos_raw DESC, vec_id ASC) AS rank FROM scored)
-          WHERE rank <= 5
-          ORDER BY query_id, rank""",
+    "lsh_ivf_topk" -> ivfTopkSql(refine = 0, "ORDER BY vec_id LIMIT 5"),
 
     "sem_dedup" ->
       s"""WITH ${ivfAssignSql(10)},
@@ -1634,20 +1663,7 @@ object Lsh {
           WHERE cos_raw >= 0.4
           ORDER BY vec_a, vec_b""",
 
-    "lsh_ivf_refined" ->
-      s"""WITH ${ivfAssignSql(10, refine = 1)},
-          qs AS (SELECT vec_id AS query_id, embedding AS q, cell, nrm AS qn
-                 FROM normed ORDER BY vec_id LIMIT 5),
-          scored AS (
-            SELECT qs.query_id, a.vec_id,
-                   ${dotSql("qs.q", "a.embedding")} / (qs.qn * a.nrm) AS cos_raw
-            FROM normed a JOIN qs ON a.cell = qs.cell)
-          SELECT query_id, CAST(rank AS INT) AS rank, vec_id,
-                 ${sqlRound4("cos_raw")} AS cos
-          FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY cos_raw DESC, vec_id ASC) AS rank FROM scored)
-          WHERE rank <= 5
-          ORDER BY query_id, rank""",
+    "lsh_ivf_refined" -> ivfTopkSql(refine = 1, "ORDER BY vec_id LIMIT 5"),
 
     // same refined assignment CTE; distance re-derived against the final
     // centroids with the identical left-to-right fold, snapped pre-sum
@@ -1677,21 +1693,7 @@ object Lsh {
     // (p-prefixed CTEs, 2 Lloyd rounds) + the per-query ADC table in 1e-4
     // ticks, summed as integers so the ranking is exact.
     "lsh_ivfpq_topk" ->
-      s"""WITH ${ivfAssignSql(10)},
-          ${pqSql(8, 2)},
-          qs AS (SELECT vec_id AS query_id, embedding AS q, cell
-                 FROM assigned ORDER BY vec_id LIMIT 5),
-          adc AS (
-            SELECT q.query_id, c.sub, c.code,
-                   CAST(round((${pqDistSql("q.q", "c.sub", "c.cent")})*10000) AS BIGINT) AS dq
-            FROM qs q CROSS JOIN pcb c),
-          cand AS (
-            SELECT q.query_id, a.vec_id, CAST(sum(adc.dq) AS BIGINT) AS adist_tenk
-            FROM assigned a JOIN qs q ON a.cell = q.cell
-            JOIN pcodes pc ON pc.vec_id = a.vec_id
-            JOIN adc ON adc.query_id = q.query_id
-                    AND adc.sub = pc.sub AND adc.code = pc.code
-            GROUP BY 1, 2)
+      s"""WITH $ivfpqCandSql
           SELECT query_id, CAST(rank AS INT) AS rank, vec_id,
                  adist_tenk/10000.0 AS adist
           FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -1703,21 +1705,7 @@ object Lsh {
     // exact squared L2 against the raw vectors (1e-4 ticks, same
     // sequential fold as the Spark expression)
     "lsh_ivfpq_refined" ->
-      s"""WITH ${ivfAssignSql(10)},
-          ${pqSql(8, 2)},
-          qs AS (SELECT vec_id AS query_id, embedding AS q, cell
-                 FROM assigned ORDER BY vec_id LIMIT 5),
-          adc AS (
-            SELECT q.query_id, c.sub, c.code,
-                   CAST(round((${pqDistSql("q.q", "c.sub", "c.cent")})*10000) AS BIGINT) AS dq
-            FROM qs q CROSS JOIN pcb c),
-          cand AS (
-            SELECT q.query_id, a.vec_id, CAST(sum(adc.dq) AS BIGINT) AS adist_tenk
-            FROM assigned a JOIN qs q ON a.cell = q.cell
-            JOIN pcodes pc ON pc.vec_id = a.vec_id
-            JOIN adc ON adc.query_id = q.query_id
-                    AND adc.sub = pc.sub AND adc.code = pc.code
-            GROUP BY 1, 2),
+      s"""WITH $ivfpqCandSql,
           pool AS (
             SELECT query_id, vec_id
             FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -1741,18 +1729,7 @@ object Lsh {
     // lsh_rp_near_dup's chain plus the ±1-bit probe union: side A probes
     // its own bucket and every bucket one sign-bit away in each band.
     "lsh_rp_multiprobe" ->
-      s"""WITH mat AS (
-            SELECT j, i,
-                   CASE WHEN ('0x'||substr(md5('rp:'||j||':'||i),1,15))::BIGINT % 2 = 0
-                        THEN 1.0 ELSE -1.0 END AS sgn
-            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(i)),
-          proj AS (
-            SELECT vec_id, j,
-                   CAST(sum(CAST(round(x * sgn * 1e7) AS BIGINT)) AS BIGINT) / 1e7 AS raw
-            FROM (SELECT vec_id, i, CAST(embedding[i + 1] AS DOUBLE) AS x
-                  FROM embeddings, generate_series(0, 63) g(i))
-            JOIN mat USING (i)
-            GROUP BY vec_id, j),
+      s"""WITH $rpProjSql,
           bands AS (
             SELECT vec_id, j // 4 AS band,
                    CAST(sum(CAST(raw >= 0 AS INT) * (1 << (j % 4))) AS BIGINT) AS band_val
@@ -1767,30 +1744,14 @@ object Lsh {
             FROM probes a JOIN bands b
               ON a.band = b.band AND a.band_val = b.band_val
              AND a.vec_id < b.vec_id),
-          e AS (
-            SELECT vec_id, embedding,
-                   sqrt(${dotSql("embedding", "embedding")}) AS nrm
-            FROM embeddings)
-          SELECT vec_a, vec_b, ${sqlRound4("cos_raw")} AS cos FROM (
-            SELECT vec_a, vec_b,
-                   ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos_raw
-            FROM cand JOIN e a ON cand.vec_a = a.vec_id
-                      JOIN e b ON cand.vec_b = b.vec_id)
-          WHERE cos_raw >= 0.4
-          ORDER BY vec_a, vec_b""",
+          $rpCosineSql""",
 
     // Bigram-simhash signatures (dedup on the bigram STRING, then hash —
     // mirrors simhashBigramSigs), 4×8-bit chunk index, bit_count(xor)
     // verification at hamming ≤ 2 (chunk index exact by pigeonhole).
     "lsh_simhash_pairs" ->
       s"""WITH sigs AS (
-            SELECT doc_id, CAST($simhashTermsSql AS BIGINT) AS simhash
-            FROM (SELECT doc_id,
-                    list_transform(list_distinct(list_transform(
-                      range(1, len($toksSql)),
-                      i -> $toksSql[i] || ' ' || $toksSql[i+1])),
-                      t -> ('0x'||substr(md5(t),1,8))::BIGINT) AS hs
-                  FROM documents)
+            $bigramSimhashSql
             WHERE len(hs) > 0),
           chunks AS (
             SELECT doc_id, c AS chunk, (simhash >> (8*c)) & 255 AS chunk_val

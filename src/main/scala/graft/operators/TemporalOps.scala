@@ -452,6 +452,34 @@ object TemporalOps {
     })
   )
 
+  /** The oracle side of [[graft.sources.UpsertTable.lastWriterWins]]:
+    * each user's events ranked newest first (µs desc, event_id desc), so
+    * rank 1 is the last writer. */
+  private[graft] val lastWriterRankSql =
+    """row_number() OVER (PARTITION BY user_id
+                          ORDER BY epoch_us(ts) DESC, event_id DESC)"""
+
+  /** i9's state-change CTEs, shared with i10: each user's events with the
+    * previous type (`ch`), kept where the type changed (`f`). */
+  private val stateChangesSql =
+    """ch AS (
+           SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
+                  lag(event_type, 1) OVER (PARTITION BY user_id
+                    ORDER BY epoch_us(ts), event_id) AS prev_type
+           FROM events),
+         f AS (
+           SELECT user_id, event_type, us, event_id FROM ch
+           WHERE prev_type IS NULL OR event_type <> prev_type)"""
+
+  /** i12's per-row (month, exact-integer row hash) over orders-shaped `from`. */
+  private def monthRowHashSql(from: String): String =
+    s"""SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
+                  ('0x'||substr(md5(concat_ws('|', o_orderkey::VARCHAR,
+                    o_custkey::VARCHAR, o_orderstatus, pcents::VARCHAR,
+                    epoch_us(o_orderdate)::VARCHAR, o_orderpriority)),1,15))::BIGINT
+                    % 1000000007 AS h
+           FROM $from"""
+
   val oracle: Map[String, String] = Map(
     "i15_backfill" ->
       """WITH daily AS (
@@ -579,11 +607,10 @@ object TemporalOps {
          ORDER BY event_id""",
 
     "i7_upsert" ->
-      """WITH target AS (
+      s"""WITH target AS (
            SELECT user_id, event_id, event_type, epoch_us(ts) AS us
            FROM events WHERE ts <= TIMESTAMP '2024-01-15 00:00:00'
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY epoch_us(ts) DESC, event_id DESC) = 1),
+           QUALIFY $lastWriterRankSql = 1),
          delta AS (
            SELECT user_id, event_id, event_type, epoch_us(ts) AS us
            FROM events WHERE ts > TIMESTAMP '2024-01-15 00:00:00')
@@ -594,14 +621,7 @@ object TemporalOps {
          ORDER BY user_id""",
 
     "i9_scd2_history" ->
-      """WITH ch AS (
-           SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
-                  lag(event_type, 1) OVER (PARTITION BY user_id
-                    ORDER BY epoch_us(ts), event_id) AS prev_type
-           FROM events),
-         f AS (
-           SELECT user_id, event_type, us, event_id FROM ch
-           WHERE prev_type IS NULL OR event_type <> prev_type)
+      s"""WITH $stateChangesSql
          SELECT user_id, event_type AS state, us AS valid_from,
                 coalesce(lead(us, 1) OVER w - 1, -1) AS valid_to,
                 CAST(lead(us, 1) OVER w IS NULL AS INT) AS is_current
@@ -611,14 +631,7 @@ object TemporalOps {
     // i9's history CTE joined to purchase facts on the key, interval
     // test as a filter
     "i10_scd2_lookup" ->
-      """WITH ch AS (
-           SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
-                  lag(event_type, 1) OVER (PARTITION BY user_id
-                    ORDER BY epoch_us(ts), event_id) AS prev_type
-           FROM events),
-         f AS (
-           SELECT user_id, event_type, us, event_id FROM ch
-           WHERE prev_type IS NULL OR event_type <> prev_type),
+      s"""WITH $stateChangesSql,
          hist AS (
            SELECT user_id, event_type AS state, us AS valid_from,
                   coalesce(lead(us, 1) OVER w - 1, -1) AS valid_to,
@@ -635,11 +648,10 @@ object TemporalOps {
     // the composed sync loop: delta slice → LWW collapse → classify vs the
     // pre-sync state, all as CTEs over the same key
     "i11_sync_pipeline" ->
-      """WITH target AS (
+      s"""WITH target AS (
            SELECT user_id AS tu, event_type AS old_type
            FROM events WHERE ts <= TIMESTAMP '2024-01-15 00:00:00'
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY epoch_us(ts) DESC, event_id DESC) = 1),
+           QUALIFY $lastWriterRankSql = 1),
          delta AS (
            SELECT user_id, event_id, event_type, epoch_us(ts) AS us
            FROM events WHERE ts > TIMESTAMP '2024-01-15 00:00:00'),
@@ -660,20 +672,18 @@ object TemporalOps {
          ORDER BY d.user_id""",
 
     "i13_precedence_merge" ->
-      """WITH a AS (
+      s"""WITH a AS (
            SELECT user_id, event_type AS a_type,
                   CAST(round(value*100) AS BIGINT) AS a_vc,
                   epoch_us(ts) AS a_us
            FROM events WHERE event_type IN ('signup', 'purchase')
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                     ORDER BY epoch_us(ts) DESC, event_id DESC) = 1),
+           QUALIFY $lastWriterRankSql = 1),
          b AS (
            SELECT user_id, event_type AS b_type,
                   CAST(round(value*100) AS BIGINT) AS b_vc,
                   epoch_us(ts) AS b_us
            FROM events WHERE event_type IN ('view', 'click', 'error')
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                     ORDER BY epoch_us(ts) DESC, event_id DESC) = 1)
+           QUALIFY $lastWriterRankSql = 1)
          SELECT coalesce(a.user_id, b.user_id) AS user_id,
                 CASE WHEN a_us IS NULL THEN 'b'
                      WHEN b_us IS NULL THEN 'a' ELSE 'both' END AS present,
@@ -697,7 +707,7 @@ object TemporalOps {
     // Same defect derivation, same exact-integer row hash; HUGEINT checksum
     // sums stay internal to the CASE (never in the output schema).
     "i12_reconcile" ->
-      """WITH src AS (
+      s"""WITH src AS (
            SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority,
                   o_orderdate,
                   CAST(round(o_totalprice*100) AS BIGINT) AS pcents
@@ -709,19 +719,9 @@ object TemporalOps {
                        ELSE pcents END AS pcents
            FROM src WHERE o_orderkey % 997 <> 7),
          sh AS (
-           SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-                  ('0x'||substr(md5(concat_ws('|', o_orderkey::VARCHAR,
-                    o_custkey::VARCHAR, o_orderstatus, pcents::VARCHAR,
-                    epoch_us(o_orderdate)::VARCHAR, o_orderpriority)),1,15))::BIGINT
-                    % 1000000007 AS h
-           FROM src),
+           ${monthRowHashSql("src")}),
          th AS (
-           SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-                  ('0x'||substr(md5(concat_ws('|', o_orderkey::VARCHAR,
-                    o_custkey::VARCHAR, o_orderstatus, pcents::VARCHAR,
-                    epoch_us(o_orderdate)::VARCHAR, o_orderpriority)),1,15))::BIGINT
-                    % 1000000007 AS h
-           FROM tgt),
+           ${monthRowHashSql("tgt")}),
          sa AS (SELECT month, count(*) AS src_n, sum(h) AS src_sum
                 FROM sh GROUP BY 1),
          ta AS (SELECT month, count(*) AS tgt_n, sum(h) AS tgt_sum
@@ -737,16 +737,14 @@ object TemporalOps {
          ORDER BY month""",
 
     "i8_snapshot_diff" ->
-      """WITH old AS (
+      s"""WITH old AS (
            SELECT user_id AS ku, event_type AS old_type
            FROM events WHERE ts <= TIMESTAMP '2024-01-10 00:00:00'
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY epoch_us(ts) DESC, event_id DESC) = 1),
+           QUALIFY $lastWriterRankSql = 1),
          neu AS (
            SELECT user_id AS kn, event_type AS new_type
            FROM events WHERE ts <= TIMESTAMP '2024-01-20 00:00:00'
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY epoch_us(ts) DESC, event_id DESC) = 1)
+           QUALIFY $lastWriterRankSql = 1)
          SELECT coalesce(ku, kn) AS user_id,
                 CASE WHEN ku IS NULL THEN 'inserted'
                      WHEN kn IS NULL THEN 'deleted'

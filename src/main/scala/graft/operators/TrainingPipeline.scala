@@ -692,10 +692,7 @@ object TrainingPipeline {
       s"""WITH docs AS (
             SELECT doc_id,
                    ${sqlPct("split:", "doc_id")} AS bucket,
-                   list_distinct(list_transform(
-                     list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-                       i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])),
-                     s -> ('0x'||substr(md5(s),1,15))::BIGINT % 2147483647)) AS sh
+                   ${LlmOps.shHashSql} AS sh
             FROM documents),
           inv AS (SELECT doc_id, bucket, unnest(sh) AS h FROM docs),
           hot AS (SELECT h FROM inv GROUP BY h

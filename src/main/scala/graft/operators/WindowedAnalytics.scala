@@ -833,6 +833,38 @@ object WindowedAnalytics {
       .agg(round4(min(col("s4")) / 1e4).as("sen_slope"))
   }
 
+  /** The e7 funnel oracles' first-reach ladder: per user, the first view,
+    * then the first click after it, then the first purchase after that
+    * (each rung key-joined to the previous one, strictly later, and at
+    * most `window` later when given), and the stage reached. `reached`
+    * adds the three per-rung flags e7 and e7b report. */
+  private[graft] def funnelSql(window: String, reached: Boolean): String = {
+    def rung(r: String, prev: String, etype: String): String =
+      s"""$r AS (
+           SELECT e.user_id, min(e.ts) AS ts_min FROM events e
+           JOIN $prev ON e.user_id = $prev.user_id
+           WHERE e.event_type = '$etype' AND e.ts > $prev.ts_min""" +
+        (if (window.isEmpty) "" else s"""
+             AND e.ts <= $prev.ts_min + INTERVAL $window""") + " GROUP BY 1)"
+    val flags = if (!reached) "" else """
+                CAST(v.user_id IS NOT NULL AS INT) AS reached_view,
+                CAST(c.user_id IS NOT NULL AS INT) AS reached_click,
+                CAST(p.user_id IS NOT NULL AS INT) AS reached_purchase,"""
+    s"""WITH v AS (
+           SELECT user_id, min(ts) AS ts_min FROM events
+           WHERE event_type = 'view' GROUP BY 1),
+         ${rung("c", "v", "click")},
+         ${rung("p", "c", "purchase")},
+         u AS (SELECT DISTINCT user_id FROM events)
+         SELECT u.user_id,$flags
+                CAST(v.user_id IS NOT NULL AS INT)
+                  + CAST(c.user_id IS NOT NULL AS INT)
+                  + CAST(p.user_id IS NOT NULL AS INT) AS stage
+         FROM u LEFT JOIN v USING (user_id) LEFT JOIN c USING (user_id)
+                LEFT JOIN p USING (user_id)
+         ORDER BY user_id"""
+  }
+
   val oracle: Map[String, String] = Map(
     "e20_theil_sen" ->
       s"""WITH daily AS (
@@ -882,29 +914,7 @@ object WindowedAnalytics {
 
     // same min-ts aggregate ladder: each stage's first-reach gated by a pk
     // join on the previous stage's first-reach and a strict ts inequality
-    "e7_funnel" ->
-      """WITH v AS (
-           SELECT user_id, min(ts) AS ts_min FROM events
-           WHERE event_type = 'view' GROUP BY 1),
-         c AS (
-           SELECT e.user_id, min(e.ts) AS ts_min FROM events e
-           JOIN v ON e.user_id = v.user_id
-           WHERE e.event_type = 'click' AND e.ts > v.ts_min GROUP BY 1),
-         p AS (
-           SELECT e.user_id, min(e.ts) AS ts_min FROM events e
-           JOIN c ON e.user_id = c.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > c.ts_min GROUP BY 1),
-         u AS (SELECT DISTINCT user_id FROM events)
-         SELECT u.user_id,
-                CAST(v.user_id IS NOT NULL AS INT) AS reached_view,
-                CAST(c.user_id IS NOT NULL AS INT) AS reached_click,
-                CAST(p.user_id IS NOT NULL AS INT) AS reached_purchase,
-                CAST(v.user_id IS NOT NULL AS INT)
-                  + CAST(c.user_id IS NOT NULL AS INT)
-                  + CAST(p.user_id IS NOT NULL AS INT) AS stage
-         FROM u LEFT JOIN v USING (user_id) LEFT JOIN c USING (user_id)
-                LEFT JOIN p USING (user_id)
-         ORDER BY user_id""",
+    "e7_funnel" -> funnelSql(window = "", reached = true),
 
     // identical lag → running-sum → fold shape on µs integers
     "e11_islands" ->
@@ -972,31 +982,7 @@ object WindowedAnalytics {
          FROM g GROUP BY 1 ORDER BY user_id""",
 
     // e7's ladder with the 7-day attribution bound on each rung
-    "e7b_funnel_window" ->
-      """WITH v AS (
-           SELECT user_id, min(ts) AS ts_min FROM events
-           WHERE event_type = 'view' GROUP BY 1),
-         c AS (
-           SELECT e.user_id, min(e.ts) AS ts_min FROM events e
-           JOIN v ON e.user_id = v.user_id
-           WHERE e.event_type = 'click' AND e.ts > v.ts_min
-             AND e.ts <= v.ts_min + INTERVAL 7 DAY GROUP BY 1),
-         p AS (
-           SELECT e.user_id, min(e.ts) AS ts_min FROM events e
-           JOIN c ON e.user_id = c.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > c.ts_min
-             AND e.ts <= c.ts_min + INTERVAL 7 DAY GROUP BY 1),
-         u AS (SELECT DISTINCT user_id FROM events)
-         SELECT u.user_id,
-                CAST(v.user_id IS NOT NULL AS INT) AS reached_view,
-                CAST(c.user_id IS NOT NULL AS INT) AS reached_click,
-                CAST(p.user_id IS NOT NULL AS INT) AS reached_purchase,
-                CAST(v.user_id IS NOT NULL AS INT)
-                  + CAST(c.user_id IS NOT NULL AS INT)
-                  + CAST(p.user_id IS NOT NULL AS INT) AS stage
-         FROM u LEFT JOIN v USING (user_id) LEFT JOIN c USING (user_id)
-                LEFT JOIN p USING (user_id)
-         ORDER BY user_id""",
+    "e7b_funnel_window" -> funnelSql(window = "7 DAY", reached = true),
 
     // exact quantile_cont per (week, type) group
     "e9_latency_trend" ->

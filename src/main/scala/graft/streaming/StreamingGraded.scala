@@ -68,11 +68,10 @@ object StreamingGraded {
   /** Global last-writer-wins per user: what the upsert sink's published
     * snapshot equals once the whole feed has drained (i7b, a13). */
   private val lastWriterOracle =
-    """SELECT user_id, event_id AS last_event_id, event_type AS last_type,
+    s"""SELECT user_id, event_id AS last_event_id, event_type AS last_type,
               epoch_us(ts) AS last_us
        FROM events
-       QUALIFY row_number() OVER (PARTITION BY user_id
-                                  ORDER BY epoch_us(ts) DESC, event_id DESC) = 1
+       QUALIFY ${graft.operators.TemporalOps.lastWriterRankSql} = 1
        ORDER BY user_id"""
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -234,15 +233,6 @@ object StreamingGraded {
         .orderBy("event_type", "day")
     }),
 
-    // E9b promoted to the gate: weekly exact quantiles as a streaming
-    // aggregation in COMPLETE mode — the memory sink holds the final
-    // trigger's full state, which equals the batch aggregate for ANY
-    // batching (count and exact percentile are order-independent
-    // multiset aggregates; complete mode never evicts, so the watermark
-    // plays no role in the graded output). The 96-hour startTime shifts
-    // the epoch's Thursday window anchor onto Mondays so w.start
-    // coincides exactly with the oracle's date_trunc('week') — grading
-    // the alignment itself, which the spec could only assert in-JVM.
     // SG18: streaming CUSUM monitoring — the e18 change-point statistic
     // maintained from a live feed, the way a monitoring deployment runs it
     // (the stream owns the daily state; the detector reads the complete
@@ -270,6 +260,15 @@ object StreamingGraded {
         .orderBy("event_type", "day")
     }),
 
+    // E9b promoted to the gate: weekly exact quantiles as a streaming
+    // aggregation in COMPLETE mode — the memory sink holds the final
+    // trigger's full state, which equals the batch aggregate for ANY
+    // batching (count and exact percentile are order-independent
+    // multiset aggregates; complete mode never evicts, so the watermark
+    // plays no role in the graded output). The 96-hour startTime shifts
+    // the epoch's Thursday window anchor onto Mondays so w.start
+    // coincides exactly with the oracle's date_trunc('week') — grading
+    // the alignment itself, which the spec could only assert in-JVM.
     "e9b_quantiles_stream" -> ((s, d) => {
       val q = StreamingOps.weeklyValueQuantiles(Tables.tableStream(s, d, "events"))
       Drain.toMemory(s, q, "e9b_quantiles_sink", "complete", ConfScope.State)
@@ -786,96 +785,27 @@ object StreamingGraded {
     // the summed retraction log must equal the batch cohort matrix —
     // e8_retention's oracle verbatim (that is the IVM contract)
     "e8b_retention_stream" ->
-      """WITH wk AS (
-           SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events),
-         c AS (
-           SELECT user_id, wk,
-                  min(wk) OVER (PARTITION BY user_id) AS cohort_week
-           FROM wk)
-         SELECT cohort_week,
-                CAST(date_diff('day', cohort_week, wk) // 7 AS INT) AS week_offset,
-                count(*) AS active_users
-         FROM c GROUP BY cohort_week, week_offset
-         ORDER BY cohort_week, week_offset""",
+      graft.operators.WindowedAnalytics.oracle("e8_retention"),
 
     // the batch min-ts funnel ladder's per-user stage — what the greedy
     // arrival-time scan must converge to
     "e7b_funnel_stream" ->
-      """WITH v AS (
-           SELECT user_id, min(ts) AS ts_min FROM events
-           WHERE event_type = 'view' GROUP BY 1),
-         c AS (
-           SELECT e.user_id, min(e.ts) AS ts_min FROM events e
-           JOIN v ON e.user_id = v.user_id
-           WHERE e.event_type = 'click' AND e.ts > v.ts_min GROUP BY 1),
-         p AS (
-           SELECT e.user_id, min(e.ts) AS ts_min FROM events e
-           JOIN c ON e.user_id = c.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > c.ts_min GROUP BY 1),
-         u AS (SELECT DISTINCT user_id FROM events)
-         SELECT u.user_id,
-                CAST(v.user_id IS NOT NULL AS INT)
-                  + CAST(c.user_id IS NOT NULL AS INT)
-                  + CAST(p.user_id IS NOT NULL AS INT) AS stage
-         FROM u LEFT JOIN v USING (user_id) LEFT JOIN c USING (user_id)
-                LEFT JOIN p USING (user_id)
-         ORDER BY user_id""",
+      graft.operators.WindowedAnalytics.funnelSql(window = "", reached = false),
 
     // i11_sync_pipeline's oracle verbatim — the batch sync report the
     // streaming twin's final per-user emission must equal
     "i11b_sync_stream" ->
-      """WITH target AS (
-           SELECT user_id AS tu, event_type AS old_type
-           FROM events WHERE ts <= TIMESTAMP '2024-01-15 00:00:00'
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY epoch_us(ts) DESC, event_id DESC) = 1),
-         delta AS (
-           SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-           FROM events WHERE ts > TIMESTAMP '2024-01-15 00:00:00'),
-         vol AS (
-           SELECT user_id, count(*) AS n_delta FROM delta GROUP BY user_id),
-         dlww AS (
-           SELECT user_id, event_type AS new_type FROM delta
-           QUALIFY row_number() OVER (PARTITION BY user_id
-                                      ORDER BY us DESC, event_id DESC) = 1)
-         SELECT d.user_id, d.new_type,
-                CASE WHEN t.tu IS NULL THEN 'inserted'
-                     WHEN t.old_type <> d.new_type THEN 'updated'
-                     ELSE 'unchanged' END AS change,
-                v.n_delta
-         FROM dlww d
-         JOIN vol v ON d.user_id = v.user_id
-         LEFT JOIN target t ON d.user_id = t.tu
-         ORDER BY d.user_id""",
+      graft.operators.TemporalOps.oracle("i11_sync_pipeline"),
 
     // e13_volume_monitor's oracle verbatim — the batch alarm matrix the
     // final emission per (type, day) must equal
     "e13b_volume_stream" ->
-      """WITH daily AS (
-           SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                  count(*) AS n
-           FROM events GROUP BY 1, 2),
-         w AS (
-           SELECT event_type, day, n,
-                  CAST(sum(n) OVER tw AS BIGINT) AS base7,
-                  count(n) OVER tw AS nprior
-           FROM daily
-           WINDOW tw AS (PARTITION BY event_type ORDER BY day
-                         ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING))
-         SELECT event_type, day, n, base7,
-                CAST(n*14 > base7*3 AS INT) AS spike,
-                CAST(n*14 < base7 AS INT) AS slump
-         FROM w WHERE nprior = 7
-         ORDER BY event_type, day""",
+      graft.operators.WindowedAnalytics.oracle("e13_volume_monitor"),
 
     // e9_latency_trend's oracle verbatim — Monday-aligned streaming
     // windows must reproduce the batch date_trunc('week') frame exactly
     "e9b_quantiles_stream" ->
-      s"""SELECT date_trunc('week', ts) AS wk, event_type, count(*) AS n,
-                 ${graft.functions.ExactNum.sqlRound4("quantile_cont(value, 0.5)")} AS p50,
-                 ${graft.functions.ExactNum.sqlRound4("quantile_cont(value, 0.95)")} AS p95
-          FROM events GROUP BY wk, event_type
-          ORDER BY wk, event_type""",
+      graft.operators.WindowedAnalytics.oracle("e9_latency_trend"),
 
     // the published snapshot after the full feed drains through the sink
     "i7b_upsert_stream" -> lastWriterOracle,
@@ -885,25 +815,18 @@ object StreamingGraded {
     // out-of-window history, never the current version's bytes
     "a13_vacuum_roundtrip" -> lastWriterOracle,
 
-    // batch mirror of the visible MERGE snapshot: global LWW winner per
-    // key, keys whose winner is a tombstone (error) dropped at read
+    // a16_merge_delete's oracle verbatim: the visible MERGE snapshot is
+    // the global LWW winner per key, keys whose winner is a tombstone
+    // (error) dropped at read
     "i7c_merge_stream" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-                epoch_us(ts) AS last_us
-         FROM (SELECT user_id, event_id, event_type, ts,
-                      row_number() OVER (PARTITION BY user_id
-                        ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-               FROM events)
-         WHERE rn = 1 AND event_type <> 'error'
-         ORDER BY user_id""",
+      graft.operators.CoreRelational.oracle("a16_merge_delete"),
 
     // the telescoped sum of the per-batch CDC deltas IS the final
     // snapshot's group-by: users per current (LWW) event type
     "cdc_ivm_stream" ->
-      """SELECT event_type AS etype, count(*) AS n_users
+      s"""SELECT event_type AS etype, count(*) AS n_users
          FROM (SELECT user_id, event_type,
-                      row_number() OVER (PARTITION BY user_id
-                        ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
+                      ${graft.operators.TemporalOps.lastWriterRankSql} AS rn
                FROM events)
          WHERE rn = 1
          GROUP BY 1 ORDER BY 1""",
@@ -916,8 +839,7 @@ object StreamingGraded {
     "dd_admit_near_stream" -> {
       import graft.operators.{Lsh, LlmOps}
       s"""WITH docs AS (
-            SELECT doc_id, list_distinct(list_transform(${Lsh.shSql},
-              s -> ('0x'||substr(md5(s),1,15))::BIGINT % ${Lsh.P})) AS hs
+            SELECT doc_id, ${LlmOps.shHashSql} AS hs
             FROM documents),
           inv AS (SELECT doc_id, unnest(hs) AS h FROM docs),
           cinv AS (SELECT * FROM inv WHERE doc_id % 5 <> 0),
@@ -948,12 +870,11 @@ object StreamingGraded {
     // index ships — so the oracle caps both sides with the test-side hot
     // set
     "tp_decontaminate_stream" -> {
-      import graft.operators.{Lsh, LlmOps, TrainingPipeline}
+      import graft.operators.{LlmOps, TrainingPipeline}
       s"""WITH docs AS (
             SELECT doc_id,
                    ${TrainingPipeline.sqlPct("split:", "doc_id")} AS bucket,
-                   list_distinct(list_transform(${Lsh.shSql},
-                     s -> ('0x'||substr(md5(s),1,15))::BIGINT % ${Lsh.P})) AS hs
+                   ${LlmOps.shHashSql} AS hs
             FROM documents),
           inv AS (SELECT doc_id, bucket, unnest(hs) AS h FROM docs),
           tinv AS (SELECT doc_id AS test_id, h FROM inv WHERE bucket >= 90),
@@ -996,29 +917,10 @@ object StreamingGraded {
          WHERE end_us <= (SELECT max(epoch_us(ts)) - 600000000 FROM events)
          ORDER BY user_id, start_us""",
 
-    // lsh_ivf_topk's oracle with the query set = the streamed ids (every
-    // 50th vector) instead of the 5 lowest — same assignment CTE, same
-    // in-cell scoring, same top-5 rank rule
-    "lsh_ivf_serve_stream" -> {
-      import graft.operators.Lsh
-      import graft.functions.ExactNum.sqlRound4
-      val dotSql =
-        """list_reduce(list_prepend(0.0, list_transform(range(1, 65),
-            i -> (qs.q[i]::DOUBLE) * (a.embedding[i]::DOUBLE))), (acc, x) -> acc + x)"""
-      s"""WITH ${Lsh.ivfAssignSql(10)},
-          qs AS (SELECT vec_id AS query_id, embedding AS q, cell, nrm AS qn
-                 FROM normed WHERE vec_id % 50 = 0),
-          scored AS (
-            SELECT qs.query_id, a.vec_id,
-                   $dotSql / (qs.qn * a.nrm) AS cos_raw
-            FROM normed a JOIN qs ON a.cell = qs.cell)
-          SELECT query_id, CAST(rank AS INT) AS rank, vec_id,
-                 ${sqlRound4("cos_raw")} AS cos
-          FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY cos_raw DESC, vec_id ASC) AS rank FROM scored)
-          WHERE rank <= 5
-          ORDER BY query_id, rank"""
-    },
+    // lsh_ivf_topk's oracle (Lsh.ivfTopkSql) with the query set = the
+    // streamed ids (every 50th vector) instead of the 5 lowest
+    "lsh_ivf_serve_stream" ->
+      graft.operators.Lsh.ivfTopkSql(refine = 0, "WHERE vec_id % 50 = 0"),
 
     // the batch REBUILD of the maintained index: assignments for corpus ∪
     // increment recomputed from scratch (same CTE as lsh_ivf_topk), plus
@@ -1047,19 +949,11 @@ object StreamingGraded {
     // keep-exactly-one dedup contract, on the same relational fingerprint
     // the batch lsh_simhash_pairs oracle uses (bit-identity of the
     // streaming HOF form to this SQL is pinned in StreamingSpec)
-    "dd_simhash_stream" -> {
-      import graft.operators.Lsh.{simhashTermsSql, toksSql}
+    "dd_simhash_stream" ->
       s"""WITH sigs AS (
-            SELECT doc_id, CAST($simhashTermsSql AS BIGINT) AS simhash
-            FROM (SELECT doc_id,
-                    list_transform(list_distinct(list_transform(
-                      range(1, len($toksSql)),
-                      i -> $toksSql[i] || ' ' || $toksSql[i+1])),
-                      t -> ('0x'||substr(md5(t),1,8))::BIGINT) AS hs
-                  FROM documents))
+            ${graft.operators.Lsh.bigramSimhashSql})
           SELECT simhash, CAST(1 AS BIGINT) AS survivors
           FROM sigs GROUP BY simhash
           ORDER BY simhash"""
-    }
   )
 }
