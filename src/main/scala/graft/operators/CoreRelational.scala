@@ -2098,13 +2098,11 @@ object CoreRelational {
 
     // knnArcSql; two synchronous LPA rounds unrolled CTE by CTE:
     // plurality label among previous-round neighbor labels, min-label
-    // tie-break. (The round opens on its own line: a quoted `v$…` reads
-    // as a version directory to VersionedTableSpec's layout scan.)
+    // tie-break.
     "gr_lpa" ->
       s"""WITH $knnArcSql,
           l0 AS (SELECT DISTINCT u AS id, u AS lbl FROM ed),
-          ${roundsSql(1 to 2)(r => s"""
-          v$r AS (SELECT ed.u, l${r - 1}.lbl, count(*) AS n
+          ${roundsSql(1 to 2)(r => s"""v$r AS (SELECT ed.u, l${r - 1}.lbl, count(*) AS n
                  FROM ed JOIN l${r - 1} ON ed.v = l${r - 1}.id GROUP BY 1, 2),
           l$r AS (SELECT u AS id, lbl FROM (
                    SELECT *, row_number() OVER (

@@ -2081,6 +2081,17 @@ object LlmOps {
 
   // DuckDB-side shared fragments.
   private[graft] val toksSql = "string_split(text, ' ')"
+  /** Per `doc_id`: token count `n_tok`, distinct tokens `n_unique`, their
+    * unique and stop-word ratios and the unrounded quality `score` the
+    * Spark scorers compute. */
+  private[graft] val qualityScoreSql =
+    s"""(SELECT doc_id, n_tok, n_unique, uniq_ratio, stop_ratio,
+               0.3*uniq_ratio + 0.4*(1.0 - stop_ratio) + 0.3*least(n_tok/100.0, 1.0) AS score
+        FROM (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tok,
+                     CAST(len(list_distinct(t)) AS BIGINT) AS n_unique,
+                     CAST(len(list_distinct(t)) AS DOUBLE)/len(t) AS uniq_ratio,
+                     CAST(len(list_filter(t, x -> x IN ('the','a'))) AS DOUBLE)/len(t) AS stop_ratio
+              FROM (SELECT doc_id, $toksSql AS t FROM documents)))"""
   /** The distinct word 3-gram shingles of `text`. */
   private[graft] val shSql =
     s"""list_distinct(list_transform(range(1, len($toksSql) - 1),
@@ -2426,16 +2437,8 @@ object LlmOps {
           comp AS (SELECT src AS doc_id, min(dst) AS comp FROM reach GROUP BY src),
           scored AS (
             SELECT doc_id, lang, source,
-                   CAST(round((0.3*uniq_ratio + 0.4*(1.0 - stop_ratio)
-                               + 0.3*least(n_tok/100.0, 1.0))*10000) AS BIGINT)
-                     AS score_t
-            FROM (
-              SELECT doc_id, lang, source,
-                     CAST(len(t) AS BIGINT) AS n_tok,
-                     CAST(len(list_distinct(t)) AS DOUBLE)/len(t) AS uniq_ratio,
-                     CAST(len(list_filter(t, x -> x IN ('the','a'))) AS DOUBLE)
-                       /len(t) AS stop_ratio
-              FROM (SELECT doc_id, lang, source, $toksSql AS t FROM documents)))
+                   CAST(round(score*10000) AS BIGINT) AS score_t
+            FROM $qualityScoreSql JOIN documents USING (doc_id))
           SELECT doc_id, comp, score_t, lang, source
           FROM (SELECT s.doc_id, c.comp, s.score_t, s.lang, s.source,
                        row_number() OVER (PARTITION BY c.comp
@@ -2630,19 +2633,13 @@ object LlmOps {
           FROM documents JOIN embeddings ON doc_id = vec_id
           ORDER BY doc_id""",
 
-    // same score subquery as ta_quality_score; deciles from one
+    // the qualityScoreSql score, as ta_quality_score; deciles from one
     // quantile_cont list boundary row, dup flags from a count() window
     // over the normalized-text fingerprint
     "pp_score_calibration" ->
       s"""WITH s AS (
-            SELECT doc_id,
-                   ${sqlRound4("0.3*uniq_ratio + 0.4*(1.0 - stop_ratio) + 0.3*least(n_tokens/100.0, 1.0)")} AS score
-            FROM (
-              SELECT doc_id,
-                     CAST(len(t) AS INT) AS n_tokens,
-                     CAST(len(list_filter(t, x -> x IN ('the','a'))) AS DOUBLE)/len(t) AS stop_ratio,
-                     CAST(len(list_distinct(t)) AS DOUBLE)/len(t) AS uniq_ratio
-              FROM (SELECT doc_id, $toksSql AS t FROM documents))),
+            SELECT doc_id, ${sqlRound4("score")} AS score
+            FROM $qualityScoreSql),
           dup AS (
             SELECT doc_id, CAST(cnt > 1 AS INT) AS is_dup FROM (
               SELECT doc_id,
@@ -2679,20 +2676,15 @@ object LlmOps {
           ORDER BY doc_id""",
 
     "ta_quality_score" ->
-      s"""SELECT doc_id, n_tokens, n_unique,
+      s"""SELECT doc_id, CAST(n_tok AS INT) AS n_tokens,
+                 CAST(n_unique AS INT) AS n_unique,
                  ${sqlRound4("uniq_ratio")} AS uniq_ratio,
                  ${sqlRound4("stop_ratio")} AS stop_ratio,
                  score, CAST(score >= 0.5 AS INT) AS pass
           FROM (
-            SELECT doc_id, n_tokens, n_unique, uniq_ratio, stop_ratio,
-                   ${sqlRound4("0.3*uniq_ratio + 0.4*(1.0 - stop_ratio) + 0.3*least(n_tokens/100.0, 1.0)")} AS score
-            FROM (
-              SELECT doc_id,
-                     CAST(len(t) AS INT) AS n_tokens,
-                     CAST(len(list_distinct(t)) AS INT) AS n_unique,
-                     CAST(len(list_filter(t, x -> x IN ('the','a'))) AS DOUBLE)/len(t) AS stop_ratio,
-                     CAST(len(list_distinct(t)) AS DOUBLE)/len(t) AS uniq_ratio
-              FROM (SELECT doc_id, $toksSql AS t FROM documents)))
+            SELECT doc_id, n_tok, n_unique, uniq_ratio, stop_ratio,
+                   ${sqlRound4("score")} AS score
+            FROM $qualityScoreSql)
           ORDER BY doc_id""",
 
     "ta_langid" ->

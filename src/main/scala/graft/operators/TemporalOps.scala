@@ -529,12 +529,12 @@ object TemporalOps {
          FROM part ORDER BY p_partkey""",
 
     "h4_array" ->
-      """SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-                CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_distinct,
-                CAST(list_contains(string_split(text, ' '), 'table') AS INT) AS has_table,
-                array_to_string(string_split(text, ' ')[1:3], '-') AS first3,
-                CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS BIGINT) AS tok_chars
+      s"""SELECT doc_id,
+                CAST(len(${LlmOps.toksSql}) AS INT) AS n_tokens,
+                CAST(len(list_distinct(${LlmOps.toksSql})) AS INT) AS n_distinct,
+                CAST(list_contains(${LlmOps.toksSql}, 'table') AS INT) AS has_table,
+                array_to_string(${LlmOps.toksSql}[1:3], '-') AS first3,
+                CAST(list_sum(list_transform(${LlmOps.toksSql}, t -> length(t))) AS BIGINT) AS tok_chars
          FROM documents ORDER BY doc_id""",
 
     "h5_map" ->

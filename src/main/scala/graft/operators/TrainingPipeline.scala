@@ -548,7 +548,7 @@ object TrainingPipeline {
   val oracle: Map[String, String] = Map(
     "pp_end_to_end" ->
       s"""SELECT lang, count(*) AS n_docs,
-                 CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tokens,
+                 CAST(sum(len(${LlmOps.toksSql})) AS BIGINT) AS tokens,
                  CAST(sum(n_chars) AS BIGINT) AS chars
           FROM (
             SELECT lang, text, n_chars FROM (
@@ -566,7 +566,7 @@ object TrainingPipeline {
                  ${sqlRound4("CAST(tokens AS DOUBLE) / sum(tokens) OVER ()")} AS token_share
           FROM (
             SELECT source, count(*) AS n_docs,
-                   CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tokens,
+                   CAST(sum(len(${LlmOps.toksSql})) AS BIGINT) AS tokens,
                    ${sqlRound4("CAST(sum(n_chars) AS DOUBLE) / count(*)")} AS avg_chars,
                    count(DISTINCT lang) AS n_langs,
                    count(*) - count(DISTINCT md5(lower(trim(text)))) AS n_exact_dups
@@ -575,7 +575,7 @@ object TrainingPipeline {
 
     "pp_quality_funnel" ->
       s"""WITH t AS (
-            SELECT doc_id, source, text, string_split(text, ' ') AS tk
+            SELECT doc_id, source, text, ${LlmOps.toksSql} AS tk
             FROM documents),
           bg AS (
             SELECT doc_id, unnest(list_transform(range(1, len(tk)),
@@ -632,8 +632,8 @@ object TrainingPipeline {
                 SELECT bucket, count(*) AS n_docs,
                        CAST(sum(n_toks) AS BIGINT) AS sum_toks,
                        CAST((bucket + 1) * 64 AS BIGINT) AS upper
-                FROM (SELECT CAST(len(string_split(text, ' ')) // 64 AS INT) AS bucket,
-                             len(string_split(text, ' ')) AS n_toks
+                FROM (SELECT CAST(len(${LlmOps.toksSql}) // 64 AS INT) AS bucket,
+                             len(${LlmOps.toksSql}) AS n_toks
                       FROM documents)
                 GROUP BY bucket)))
           ORDER BY bucket""",
@@ -667,24 +667,24 @@ object TrainingPipeline {
          ORDER BY kl, doc_id LIMIT 100""",
 
     "tp_chunk" ->
-      """SELECT doc_id, CAST(gs // 48 AS INT) AS chunk_idx,
+      s"""SELECT doc_id, CAST(gs // 48 AS INT) AS chunk_idx,
                 CAST(least(n - gs, 64) AS INT) AS chunk_tokens,
                 md5(array_to_string(list_slice(toks, gs + 1, gs + 64), ' ')) AS chunk_md5
          FROM (
            SELECT doc_id, toks, n, unnest(generate_series(0, n - 1, 48)) AS gs
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks,
-                        len(string_split(text, ' ')) AS n
+           FROM (SELECT doc_id, ${LlmOps.toksSql} AS toks,
+                        len(${LlmOps.toksSql}) AS n
                  FROM documents))
          ORDER BY doc_id, chunk_idx""",
 
     "tp_pack" ->
-      """SELECT source, bin_id, count(*) AS n_docs,
+      s"""SELECT source, bin_id, count(*) AS n_docs,
                 CAST(sum(n_toks) AS BIGINT) AS bin_tokens
          FROM (
            SELECT source, n_toks,
              CAST(coalesce(sum(n_toks) OVER (PARTITION BY source ORDER BY doc_id
                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS INT) AS bin_id
-           FROM (SELECT source, doc_id, len(string_split(text, ' ')) AS n_toks
+           FROM (SELECT source, doc_id, len(${LlmOps.toksSql}) AS n_toks
                  FROM documents))
          GROUP BY source, bin_id ORDER BY source, bin_id""",
 
@@ -716,7 +716,7 @@ object TrainingPipeline {
                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS INT) AS bin_id
             FROM (SELECT source, doc_id,
                     CAST(${sqlPct("shard:", "doc_id")} % 8 AS INT) AS shard,
-                    len(string_split(text, ' ')) AS n_toks
+                    len(${LlmOps.toksSql}) AS n_toks
                   FROM documents))
           GROUP BY source, shard, bin_id ORDER BY source, shard, bin_id""",
 
@@ -805,17 +805,8 @@ object TrainingPipeline {
     // histogram-prefix reconstruction is the identical cumulative
     "tp_token_budget" ->
       s"""WITH t AS (
-            SELECT doc_id,
-                   CAST(round((0.3*uniq_ratio + 0.4*(1.0 - stop_ratio)
-                               + 0.3*least(n_tok/100.0, 1.0))*10000) AS BIGINT)
-                     AS score_t,
-                   n_tok
-            FROM (
-              SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tok,
-                     CAST(len(list_distinct(t)) AS DOUBLE)/len(t) AS uniq_ratio,
-                     CAST(len(list_filter(t, x -> x IN ('the','a'))) AS DOUBLE)
-                       /len(t) AS stop_ratio
-              FROM (SELECT doc_id, ${LlmOps.toksSql} AS t FROM documents))),
+            SELECT doc_id, CAST(round(score*10000) AS BIGINT) AS score_t, n_tok
+            FROM ${LlmOps.qualityScoreSql}),
           b AS (SELECT sum(n_tok) // 4 AS budget FROM t),
           o AS (SELECT doc_id, score_t, n_tok,
                        CAST(sum(n_tok) OVER (

@@ -54,12 +54,18 @@ object Drain {
     }
   }
 
-  /** Drain `df` into the memory sink `sink` and return the sink's table. */
+  /** Drain `df` into the memory sink `sink`; return the sink's rows as one
+    * detached partition ([[org.apache.spark.sql.graftexpr.MemorySinkFrame]]).
+    * The rows sit on the driver, but `s.table(sink)` scans them in
+    * min(rows, cores) partitions, so each read-back `groupBy`, window and
+    * `orderBy` added a shuffle, a range-sampling job and an AQE stage job.
+    * One partition satisfies them all: jobs per run 6 → 3 for
+    * e18b_cusum_stream, 5 → 3 for i11b, 4 → 3 for i3b. */
   def toMemory(s: SparkSession, df: Dataset[_], sink: String, mode: String,
       confs: Seq[(String, String)] = Nil): DataFrame = {
     apply(s, confs)(df.writeStream.format("memory").queryName(sink)
       .outputMode(mode))
-    s.table(sink)
+    org.apache.spark.sql.graftexpr.MemorySinkFrame(s, sink)
   }
 
   /** Drain `df` through `body` once per micro-batch (with the batch id),

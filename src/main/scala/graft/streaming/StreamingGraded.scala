@@ -247,16 +247,8 @@ object StreamingGraded {
     "e18b_cusum_stream" -> ((s, d) => {
       val daily = graft.operators.WindowedAnalytics.dailyTicks(
         Tables.tableStream(s, d, "events"))
-      val drained =
-        Drain.toMemory(s, daily, "e18b_cusum_sink", "complete", ConfScope.State)
-      // detach the sink view before the detector: cusumOf self-references
-      // its input (daily ⋈ per-type stats), and MemoryPlan views reuse the
-      // same attribute ids on both sides — a fresh DataFrame over the
-      // collected-at-rest rows gives the analyzer distinct ids. The frame
-      // is |days × types| (about 150 rows at sf0.01), monitoring-sized, so
-      // it is collected into a LocalRelation: no RDD lineage to schedule
-      val daily2 = s.createDataFrame(drained.collectAsList(), drained.schema)
-      graft.operators.WindowedAnalytics.cusumOf(daily2)
+      graft.operators.WindowedAnalytics.cusumOf(
+        Drain.toMemory(s, daily, "e18b_cusum_sink", "complete", ConfScope.State))
         .orderBy("event_type", "day")
     }),
 

@@ -27,7 +27,8 @@ class OracleFragmentsSpec extends AnyFunSuite {
       "epoch_us(o_orderdate)::VARCHAR, o_orderpriority)),1,15))::BIGINT",
     "operators/WindowedAnalytics.scala" ->
       "+ CAST(p.user_id IS NOT NULL AS INT) AS stage",
-    "operators/LlmOps.scala" -> "toksSql = \"string_split(text, ' ')\"",
+    "operators/LlmOps.scala" -> "string_split(text, ' ')",
+    "operators/LlmOps.scala" -> "0.3*uniq_ratio + 0.4*(1.0 - stop_ratio)",
     "operators/LlmOps.scala" ->
       "i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2]",
     "operators/LlmOps.scala" -> "s -> ('0x'||substr(md5(s),1,15))::BIGINT",

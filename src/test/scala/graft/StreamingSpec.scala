@@ -1442,4 +1442,50 @@ class StreamingSpec extends AnyFunSuite {
       assert(second == 0, s"second call started $second job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("a memory-sink drain reads back as one partition: its read-backs " +
+      "plan no shuffle and a count runs one job") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.expressions.Window
+    object Plans extends AdaptiveSparkPlanHelper
+    val drained = Drain.toMemory(spark, StreamingOps.tumblingCounts(
+        Tables.tableStream(spark, writeEventsFixture(evs), "events")),
+      "one_partition_sink", "complete", ConfScope.State)
+    assert(drained.queryExecution.executedPlan.outputPartitioning ==
+      SinglePartition)
+    val perType = drained.groupBy("event_type").agg(sum("n").as("n"))
+      .orderBy("event_type")
+    val ranked = drained.withColumn("rk", row_number().over(
+        Window.partitionBy("event_type").orderBy("hour_start")))
+      .orderBy("event_type", "rk")
+    for (df <- Seq(perType, ranked)) {
+      val shuffles = Plans.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+      assert(shuffles.isEmpty, df.queryExecution.executedPlan.toString)
+    }
+    assert(perType.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq ==
+      Seq("click" -> 4L, "purchase" -> 1L, "view" -> 1L))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(body: => Long): (Long, Int) = {
+      org.apache.spark.GraftBusAccess.drain(spark.sparkContext)
+      jobs.set(0)
+      val n = body
+      org.apache.spark.GraftBusAccess.drain(spark.sparkContext)
+      (n, jobs.get())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsOf(drained.count()) == (5L, 1))
+      assert(jobsOf(ranked.count()) == (5L, 1))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
