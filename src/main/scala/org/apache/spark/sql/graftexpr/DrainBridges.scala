@@ -1,7 +1,6 @@
-// Lives under org.apache.spark.sql.* because the ArtifactManager members,
-// Dataset.ofRows and MemoryPlan it reads are internal to sql — same
-// packaging as the expression bridges. The graft-facing user is
-// graft.streaming.Drain.
+// Lives under org.apache.spark.sql.* because the ArtifactManager members
+// it reads and Dataset.ofRows are internal to sql — same packaging as the
+// expression bridges. The graft-facing user is graft.streaming.Drain.
 package org.apache.spark.sql.graftexpr
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -36,9 +35,8 @@ object MemorySinkFrame {
     * `CoalesceExec` reporting `SinglePartition`. */
   def apply(s: SparkSession, name: String): DataFrame = {
     val cs = s.asInstanceOf[ClassicSession]
-    val sink = cs.table(name).queryExecution.analyzed.collectFirst {
-      case p: MemoryPlan => p
-    }.getOrElse(throw new IllegalArgumentException(s"$name is not a memory sink"))
+    val sink = cs.table(name).queryExecution.analyzed
+      .collectFirst { case p: MemoryPlan => p }.get
     Dataset.ofRows(cs, Repartition(1, shuffle = false, LocalRelation
       .fromExternalRows(sink.output.map(_.newInstance()), sink.sink.allData)))
   }
