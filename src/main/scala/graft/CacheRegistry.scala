@@ -3,95 +3,90 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Lifecycle owner for the materialized indexes some operators build at
-  * plan-construction time (the shingle inverted index, the TF-IDF term
-  * table, the IVF cell assignment).
+/** The one owner of shared-build lifetimes: the frames operators persist at
+  * plan-construction time (the shingle inverted index, the kNN edge set,
+  * the fixpoint rounds) and the session-scoped memos that hand one build to
+  * several consumers (table reads, input spools, the components index).
   *
-  * Spark re-evaluates plan subtrees referenced more than once, so those
-  * builders persist their index DataFrame — but `persist` at construction
-  * time with no matching `unpersist` accumulates cache entries for the
-  * session lifetime when the same query is built across several scale
-  * factors. Every such persist goes through [[materialize]] instead, and the
-  * harness (Verify / Bench / tests) calls [[releaseAll]] when it is done
-  * with the plans it built. Spark's CacheManager keys on the canonical plan,
-  * so registering the same logical index twice still stores one copy;
-  * unpersisting it twice is a no-op.
+  * Every shared build has one of two lifetimes, declared where it is
+  * registered (BASELINE.md's PREP boundary rule decides which):
+  *  - [[Prep]]: state a deployment keeps (table reads, landing spools,
+  *    stored labels, the kNN and shingle indexes); kept until
+  *    [[releaseAll]], so it survives bench passes.
+  *  - [[PerPass]]: graded work shared by several consumers (the components
+  *    index, the PCA basis, the BPE rounds, every frame a fixpoint build
+  *    registers); dropped by [[passReset]] and by [[releaseAll]], so each
+  *    bench pass times one honest build.
+  *
+  * A canonical plan is registered once. Spark's CacheManager keys on the
+  * canonical plan, so a rebuild that re-registers a plan already cached
+  * gets the frame back as it is: no second `persist` and no second entry.
+  * Unpersisting is keyed by canonical plan too, so a plan registered under
+  * both lifetimes is tracked under the first one and released with it
+  * (no build here does that: every re-registration of the eager rebuilds
+  * hits a PREP plan from a PREP call site).
   */
 object CacheRegistry {
-  private val live = scala.collection.mutable.ArrayBuffer[DataFrame]()
-  private val releaseHooks = scala.collection.mutable.ArrayBuffer[() => Unit]()
 
-  /** Persist `df` (memory-and-disk) and track it for later release. */
-  def materialize(df: DataFrame): DataFrame = synchronized {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    live += df
+  sealed trait Lifetime
+  /** Kept until [[releaseAll]]. */
+  case object Prep extends Lifetime
+  /** Cleared by [[passReset]] and by [[releaseAll]]. */
+  case object PerPass extends Lifetime
+
+  /** A session-scoped memo of one shared build per key, cleared with its
+    * [[Lifetime]]. A build may call another memo (the stored labels and
+    * the components index both read the shingle pairs), so lookups never
+    * lock across a build; the registry assumes one driver thread builds
+    * plans, as every main here does. */
+  final class Memo[K, V] private[CacheRegistry] (val lifetime: Lifetime) {
+    private val entries = scala.collection.concurrent.TrieMap[K, V]()
+    def apply(key: K)(build: => V): V = entries.getOrElseUpdate(key, build)
+    private[CacheRegistry] def clear(): Unit = entries.clear()
+  }
+
+  private val frames = scala.collection.mutable.ArrayBuffer[(DataFrame, Lifetime)]()
+  private val memos = scala.collection.mutable.ArrayBuffer[Memo[_, _]]()
+
+  /** A new memo with the given lifetime. */
+  def memo[K, V](lifetime: Lifetime): Memo[K, V] = synchronized {
+    val m = new Memo[K, V](lifetime)
+    memos += m
+    m
+  }
+
+  private def register(df: DataFrame, lifetime: Lifetime): DataFrame = synchronized {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      frames += df -> lifetime
+    }
     df
   }
 
-  private val sharedLive = scala.collection.mutable.ArrayBuffer[DataFrame]()
+  /** Persist `df` (memory-and-disk) as [[Prep]] unless its plan is cached. */
+  def materialize(df: DataFrame): DataFrame = register(df, Prep)
 
-  /** [[materialize]] for frames registered DURING a shared-build memo's
-    * build (the PCA covariance and power rounds, the BPE round winners,
-    * the incremental-components contraction frame): tracked separately so
-    * [[passReset]] can UNPERSIST them along with clearing the memos.
-    * Without this, a rebuild whose plan is canonically identical across
-    * passes is a CacheManager hit (it keys on the canonical plan) — the
-    * "one honest build per pass" contract would silently report the
-    * cached-prefix cost from pass 2 on, and `live` would accumulate a
-    * duplicate registration per pass. Frames that hold PREP a deployment
-    * persists (stored labels, input spools, table reads) stay on
-    * [[materialize]] and survive passes. */
-  def materializeShared(df: DataFrame): DataFrame = synchronized {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    sharedLive += df
-    df
+  /** Persist `df` as [[PerPass]] unless its plan is cached: for frames
+    * registered during a per-pass build. Without the reset, a rebuild whose
+    * plan is canonically identical across passes would be a CacheManager
+    * hit, and pass 2 on would time the cached prefix instead of the build. */
+  def materializeShared(df: DataFrame): DataFrame = register(df, PerPass)
+
+  private def release(lifetimes: Set[Lifetime]): Unit = synchronized {
+    val (gone, kept) = frames.partition(f => lifetimes(f._2))
+    gone.foreach(_._1.unpersist(blocking = false))
+    frames.clear()
+    frames ++= kept
+    memos.filter(m => lifetimes(m.lifetime)).foreach(_.clear())
   }
 
-  /** Register a callback to run on every [[releaseAll]] — for operator
-    * modules that keep DERIVED state built from registry caches (e.g. the
-    * components memo): a release that cleared the caches but left such a
-    * memo in place would serve stale results if the underlying data changed
-    * before the next build. Hook registration keeps the registry
-    * operator-agnostic (idempotent hooks; registered once per module). */
-  def onRelease(hook: () => Unit): Unit = synchronized {
-    releaseHooks += hook
-  }
+  /** Drop every [[PerPass]] frame and memo: Bench calls it before each
+    * timed pass, so the next rebuild re-executes the build. */
+  def passReset(): Unit = release(Set(PerPass))
 
-  private val passResetHooks = scala.collection.mutable.ArrayBuffer[() => Unit]()
+  /** Unpersist every tracked frame (non-blocking) and clear every memo. */
+  def releaseAll(): Unit = release(Set(Prep, PerPass))
 
-  /** Register a callback for [[passReset]] — for SHARED-BUILD memos whose
-    * build is graded work (the components index, the PCA basis, the BPE
-    * rounds): Bench resets these before each timed pass so exactly one
-    * honest build is measured per pass (whichever consumer runs first
-    * pays; the others read the shared frame — the real serving shape).
-    * Contrast with [[onRelease]]-only memos, which hold PREP a deployment
-    * keeps as persisted state (stored labels, landing spools, the table
-    * read cache) and survive across passes. */
-  def onPassReset(hook: () => Unit): Unit = synchronized {
-    passResetHooks += hook
-  }
-
-  /** Clear every shared-build memo (see [[onPassReset]]) AND unpersist the
-    * frames those builds registered via [[materializeShared]] — called by
-    * Bench before each timed pass, so the next pass's rebuild re-executes
-    * the build instead of reading a canonical-plan cache hit. */
-  def passReset(): Unit = synchronized {
-    sharedLive.foreach(_.unpersist(blocking = false))
-    sharedLive.clear()
-    passResetHooks.foreach(_.apply())
-  }
-
-  /** Unpersist every tracked index (non-blocking), clear the registry, and
-    * run the registered release + pass-reset hooks. */
-  def releaseAll(): Unit = synchronized {
-    live.foreach(_.unpersist(blocking = false))
-    live.clear()
-    sharedLive.foreach(_.unpersist(blocking = false))
-    sharedLive.clear()
-    releaseHooks.foreach(_.apply())
-    passResetHooks.foreach(_.apply())
-  }
-
-  /** Number of currently tracked materializations (for tests). */
-  def trackedCount: Int = synchronized(live.size)
+  /** Number of currently tracked frames, both lifetimes. */
+  def trackedCount: Int = synchronized(frames.size)
 }

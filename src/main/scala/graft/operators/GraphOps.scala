@@ -36,7 +36,7 @@ object GraphOps {
     // materializeShared, not materialize: fixpoints run inside per-pass
     // rebuilt builders (components memo, incremental maintenance), so the
     // frames must die with the pass or the next rebuild is a
-    // canonical-plan cache hit and re-registers a duplicate every pass
+    // canonical-plan cache hit
     val e = graft.CacheRegistry.materializeShared(
       edges.select(col("src"), col("dst"))
         .union(edges.select(col("dst").as("src"), col("src").as("dst"))))

@@ -216,18 +216,9 @@ object LlmOps {
     * has two graded consumers and the τ=0.3 frame feeds every fixpoint
     * round — CacheManager keys on the canonical plan, so same-τ callers
     * share one copy. */
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String, Double), DataFrame]()
-  graft.CacheRegistry.onRelease(() => pairsMemo.clear())
-
   private[graft] def jaccardPairs(s: org.apache.spark.sql.SparkSession,
       d: String, tau: Double): DataFrame =
-    // memoized per (session, dir, τ) like componentsMemo — CacheManager
-    // would dedupe the storage anyway (canonical-plan key), but registering
-    // the same frame once per caller spams "already cached" warnings and
-    // duplicate registry entries
-    pairsMemo.getOrElseUpdate((s, d, tau),
-      graft.CacheRegistry.materialize(jaccardPairsOf(documents(s, d), tau)))
+    graft.CacheRegistry.materialize(jaccardPairsOf(documents(s, d), tau))
 
   /** Blocked inverted-index pair expansion shared by every set-similarity
     * scorer: one row per candidate pair with the shared-shingle count and
@@ -383,18 +374,14 @@ object LlmOps {
     * it, `dd_keep_one` prunes the corpus with it. The fixpoint loop is
     * driver-side control flow over checkpointed DataFrames, i.e. a stored
     * index build; recomputing it per consumer would double the most
-    * expensive build in the suite for no reason. Bench clears this memo
-    * before each timed pass so exactly one honest build is measured per
-    * pass (serving both queries), never a stale cached read. */
-  private val componentsMemo =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-  // derived from registry-cached frames → must not outlive a cache
-  // release; shared-BUILD memo → reset per bench pass (CacheRegistry
-  // scaladoc)
-  graft.CacheRegistry.onPassReset(() => clearComponentsMemo())
+    * expensive build in the suite for no reason. Per-pass, so each bench
+    * pass measures exactly one honest build (serving both queries), never
+    * a stale cached read. */
+  private val componentsMemo = graft.CacheRegistry.memo[
+    (org.apache.spark.sql.SparkSession, String), DataFrame](graft.CacheRegistry.PerPass)
 
   private[graft] def componentsOf(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    componentsMemo.getOrElseUpdate((s, d),
+    componentsMemo((s, d))(
       // ConfScope.Fixpoint: the verified-fixpoint rounds run HERE (label
       // frames are |V|-sized; measured 1.3 s → 0.9 s at sf0.1)
       ConfScope(s, ConfScope.Fixpoint) {
@@ -405,15 +392,12 @@ object LlmOps {
           rounds = None)
       })
 
-  private[graft] def clearComponentsMemo(): Unit = componentsMemo.clear()
-
   /** The simulated pre-existing label store for `dd_components_incr` and
-    * its streaming twin — see the registration notes. NOT cleared per
-    * bench pass (unlike componentsMemo): it stands in for persisted lake
-    * state, not for work the queries perform. */
-  private val storedLabelsMemo =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-  graft.CacheRegistry.onRelease(() => storedLabelsMemo.clear())
+    * its streaming twin — see the registration notes. PREP, unlike
+    * componentsMemo: it stands in for persisted lake state, not for work
+    * the queries perform. */
+  private val storedLabelsMemo = graft.CacheRegistry.memo[
+    (org.apache.spark.sql.SparkSession, String), DataFrame](graft.CacheRegistry.Prep)
 
   /** doc_id % 5 == 0 — the deterministic increment slice every
     * incremental-dedup query uses (dd_incremental's convention). */
@@ -441,7 +425,7 @@ object LlmOps {
     * the shared τ=0.3 pair frame, session-memoized as PREP. */
   private[graft] def storedOldLabels(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    storedLabelsMemo.getOrElseUpdate((s, d), ConfScope(s, ConfScope.Fixpoint) {
+    storedLabelsMemo((s, d))(ConfScope(s, ConfScope.Fixpoint) {
       graft.CacheRegistry.materialize(
         GraphOps.minLabelComponents(
           documents(s, d).filter(!isNewDoc(col("doc_id")))
@@ -454,21 +438,13 @@ object LlmOps {
 
   /** τ=0.3 pairs with ≥1 NEW endpoint — the stored-index probe result an
     * increment applies (materialized; shared by the batch and streaming
-    * incremental-components queries). Memoized per (session, dir) like
-    * storedLabelsMemo: CacheManager would dedupe the storage anyway
-    * (canonical-plan key), but re-registering the same frame per caller
-    * spams "already cached" warnings and duplicate registry entries. */
-  private val newSidePairsMemo =
-    scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-  graft.CacheRegistry.onRelease(() => newSidePairsMemo.clear())
-
+    * incremental-components queries). */
   private[graft] def newSidePairs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    newSidePairsMemo.getOrElseUpdate((s, d),
-      graft.CacheRegistry.materialize(
-        jaccardPairs(s, d, 0.3)
-          .filter(isNewDoc(col("doc_a")) || isNewDoc(col("doc_b")))
-          .select(col("doc_a").as("src"), col("doc_b").as("dst"))))
+    graft.CacheRegistry.materialize(
+      jaccardPairs(s, d, 0.3)
+        .filter(isNewDoc(col("doc_a")) || isNewDoc(col("doc_b")))
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
 
   /** Per-doc token occurrence counts (doc_id, tok, m) — ONE hash aggregate
     * over the exploded token stream, materialized once and shared by the
@@ -839,15 +815,15 @@ object LlmOps {
   }
 
   /** The graded 3-round BPE build, shared by `ta_bpe_merge` (the merge
-    * table) and `ta_bpe_compress` (the merged sequences) — reset per
-    * bench pass so one honest build is timed per pass. */
-  private val bpeMemo = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]()
-  graft.CacheRegistry.onPassReset(() => bpeMemo.clear())
+    * table) and `ta_bpe_compress` (the merged sequences) — per-pass, so
+    * one honest build is timed per pass. */
+  private val bpeMemo = graft.CacheRegistry.memo[
+    (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)](
+    graft.CacheRegistry.PerPass)
 
   private def bpeRoundsOf(s: org.apache.spark.sql.SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    bpeMemo.getOrElseUpdate((s, d),
+    bpeMemo((s, d))(
       // deliberately NOT ConfScope.NoAdaptive (unlike the graph/PCA
       // fixpoints): the BPE rounds are CORPUS-sized window passes, not
       // model-sized frames, so AQE's coalescing is the right default. A/B'd in

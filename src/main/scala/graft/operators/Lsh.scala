@@ -119,14 +119,14 @@ object Lsh {
   val eager: Set[String] = Set("emb_pca_top1", "emb_pca_topk", "emb_pca_project")
 
   /** The graded top-2 basis, one BUILD shared by its two consumers —
-    * reset per bench pass (CacheRegistry.onPassReset). */
-  private val basisMemo = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  graft.CacheRegistry.onPassReset(() => basisMemo.clear())
+    * reset per bench pass. */
+  private val basisMemo = graft.CacheRegistry.memo[
+    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame](
+    graft.CacheRegistry.PerPass)
 
   private def pcaBasisOf(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    basisMemo.getOrElseUpdate((s, d),
+    basisMemo((s, d))(
       // ConfScope.NoAdaptive: everything past the one corpus covariance pass is
       // 64×64 iterative arithmetic (9 power rounds + deflation), where
       // AQE's between-stage replanning and per-checkpoint build execution

@@ -773,11 +773,14 @@ object WindowedAnalytics {
     * statistic over its drained complete-mode aggregate. See the e18
     * registry comment for the closed-form/integer rationale. */
   private[graft] def cusumOf(daily: DataFrame): DataFrame = {
-    val stats = daily.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("xt")).as("s"))
-    val wseq = Window.partitionBy("event_type").orderBy("day")
+    // n and s as whole-partition windows over the same partitioning as the
+    // running sums: one shuffle, no per-type stats join
+    val wtype = Window.partitionBy("event_type")
+    val wseq = wtype.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    daily.join(broadcast(stats), "event_type")
+    daily
+      .withColumn("n", count(lit(1)).over(wtype))
+      .withColumn("s", sum(col("xt")).over(wtype))
       .withColumn("pf", sum(col("xt") * col("n") - col("s")).over(wseq))
       .withColumn("st", col("pf") - least(min(col("pf")).over(wseq), lit(0L)))
       .select(col("event_type"), col("day"),

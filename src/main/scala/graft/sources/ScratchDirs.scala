@@ -49,9 +49,8 @@ object ScratchDirs {
     dir
   }
 
-  private val spoolMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), String]()
-  graft.CacheRegistry.onRelease(() => spoolMemo.clear())
+  private val spoolMemo =
+    graft.CacheRegistry.memo[(SparkSession, String, String), String](graft.CacheRegistry.Prep)
 
   /** Session-memoized INPUT spool: `write` materializes the landing-zone
     * fixture under the returned dir exactly once per (session, data dir)
@@ -65,9 +64,9 @@ object ScratchDirs {
     * in the next build generation. */
   def sharedInputSpool(s: SparkSession, d: String, tag: String)(
       write: String => Unit): String =
-    spoolMemo.computeIfAbsent((s, d, tag), { _ =>
+    spoolMemo((s, d, tag)) {
       val dir = freshDirFor(s, d, tag)
       write(dir)
       dir
-    })
+    }
 }

@@ -44,13 +44,11 @@ object Tables {
   // (the same documented contract as the streaming admission gate's static
   // side — fixtures are immutable within a driver run). Cleared with the
   // cache registry so a releaseAll() really ends a build generation.
-  private val tableMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-  graft.CacheRegistry.onRelease(() => tableMemo.clear())
+  private val tableMemo =
+    graft.CacheRegistry.memo[(SparkSession, String, String), DataFrame](graft.CacheRegistry.Prep)
 
   def table(s: SparkSession, dir: String, name: String): DataFrame =
-    tableMemo.computeIfAbsent((s, dir, name),
-      _ => normTs(s.read.parquet(s"$dir/$name.parquet")))
+    tableMemo((s, dir, name))(normTs(s.read.parquet(s"$dir/$name.parquet")))
 
   /** Streaming form of [[table]]: the same parquet read as a file-source
     * stream, with the same timestamp folding. File streams require an
@@ -94,18 +92,17 @@ object Tables {
   // is a parquet footer-read job, and every drain rebuilt per pass paid
   // one before its first batch. PREP under BASELINE.md's rule (a table
   // read); same lifetime and immutable-fixture contract as tableMemo.
-  private val streamSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.types.StructType]()
-  graft.CacheRegistry.onRelease(() => streamSchemaMemo.clear())
+  private val streamSchemaMemo = graft.CacheRegistry.memo[
+    (SparkSession, String), org.apache.spark.sql.types.StructType](graft.CacheRegistry.Prep)
 
   private def streamSchema(s: SparkSession, path: String) =
-    streamSchemaMemo.computeIfAbsent((s, path), _ => s.read.parquet(path).schema)
+    streamSchemaMemo((s, path))(s.read.parquet(path).schema)
 
   private def eventsRaw(s: SparkSession, d: String): DataFrame =
-    tableMemo.computeIfAbsent((s, d, "events"), { _ =>
+    tableMemo((s, d, "events")) {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normTs(s.read.parquet(s"$d/events.parquet"))
-    })
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -633,10 +633,10 @@ object StreamingGraded {
       val tmp = graft.sources.ScratchDirs.freshDirFor(s, d, "ivf_maintain")
       val cents = graft.CacheRegistry.materialize(Lsh.ivfCentroids(s, d, nlist = 10))
       // the STORED index a maintenance job starts from is PREP, like
-      // SG18's storedOldLabels and SG13's corpus assignment — session-
-      // -memoized (CacheManager dedupes the canonical plan across pass
-      // rebuilds); only the v0 WRITE, the per-batch assignments and the
-      // versioned publishes are the graded per-pass work
+      // SG18's storedOldLabels and SG13's corpus assignment — a
+      // CacheManager hit on every rebuild after the first (the registry
+      // keeps the first registration); only the v0 WRITE, the per-batch
+      // assignments and the versioned publishes are the graded per-pass work
       val baseIdx = graft.CacheRegistry.materialize(
         Lsh.assignVectors(
           Tables.embeddings(s, d).filter(col("vec_id") % 5 =!= 0)
