@@ -23,8 +23,8 @@ import org.apache.spark.storage.StorageLevel
   * gets the frame back as it is: no second `persist` and no second entry.
   * Unpersisting is keyed by canonical plan too, so a plan registered under
   * both lifetimes is tracked under the first one and released with it
-  * (no build here does that: every re-registration of the eager rebuilds
-  * hits a PREP plan from a PREP call site).
+  * (the eager rebuilds never do that: each plan they re-register was
+  * first registered as PREP, and again as PREP).
   */
 object CacheRegistry {
 
